@@ -92,3 +92,41 @@ def test_scan_guard_memoized_and_opt_in(spark, sf_small):
     d2 = dq._t(spark, sf_small, "documents", spread=True)
     assert dq._SCAN_UNDERPAR == before
     assert d0.count() == d1.count() == d2.count()
+
+
+def test_dedup_detector_pr_null_text_parity(spark, sf_small, tmp_path):
+    """dedup_detector_pr's sorted-group truth set must not pair documents
+    whose text is NULL: their prefixes are NULL, and the oracle's
+    ``a.p = b.p`` never matches NULL. Three NULL-text documents beside one
+    real prefix duplicate pair; the result stays bit-exact with DuckDB."""
+    import os
+
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+    from tests.test_oracle_parity import TABLES, assert_bit_exact, duck_con
+
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(os.path.join(sf_small, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    text = "the quick brown fox jumps over the lazy dog again and again until the sun goes down"
+    docs = [
+        (1, text, "en", "src0", len(text)),
+        (2, text + " more", "en", "src1", len(text) + 5),
+        (3, None, "en", "src0", 0),
+        (4, None, "en", "src1", 0),
+        (5, None, "fr", "src2", 0),
+        (6, "a different short document here", "en", "src2", 31),
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE docs (doc_id BIGINT, text VARCHAR, lang VARCHAR,"
+        " source VARCHAR, n_chars BIGINT)"
+    )
+    con.executemany("INSERT INTO docs VALUES (?, ?, ?, ?, ?)", docs)
+    con.execute(f"COPY docs TO '{tmp_path / 'documents.parquet'}' (FORMAT PARQUET)")
+    name = "dedup_detector_pr"
+    got = entry_mod.queries()[name](spark, str(tmp_path)).toPandas()
+    want = duck_con(str(tmp_path)).execute(entry_mod.oracle_sql()[name]).fetchdf()
+    assert int(want["n_truth"][0]) == 1  # only the (1, 2) prefix pair
+    assert_bit_exact(name, got, want)

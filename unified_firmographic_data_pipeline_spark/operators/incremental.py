@@ -7,8 +7,10 @@ compiles the materialization to a Snowflake ``MERGE`` on the configured
 ``unique_key`` (``dbt_project.yml:35-56``).
 
 Spark-first design: the watermark is the single permitted driver-side scalar
-(SURVEY.md §7.3d) — an ``agg(max)`` over the prior output, which Parquet
-answers from footer statistics without a full scan. The upsert is the
+(SURVEY.md §7.3d) — an ``agg(max)`` over the prior output. Parquet aggregate
+pushdown is off by default, so it is not answered from footer statistics:
+it scans the column and costs two Spark jobs (partial max, final max). The
+upsert is the
 join-based rewrite ``existing.join(delta, key, 'left_anti') ∪ delta`` — one
 shuffle on the key; with Delta/Iceberg the same contract maps to MERGE INTO.
 The delta filter itself is a pushed-down Parquet predicate on the source.

@@ -12897,9 +12897,12 @@ def dedup_detector_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.md5(F.array_join(F.slice("t", 1, 16), " ")).alias("p")
     )
     # same fan-out for the prefix-duplicate truth set (replaces pa⋈pb):
-    # each prefix group's sorted ids emit every unordered pair once
+    # each prefix group's sorted ids emit every unordered pair once. NULL
+    # text has a NULL prefix, which the oracle's a.p = b.p never matches,
+    # so NULL prefixes form no group
     truth = (
-        pfx.groupBy("p")
+        pfx.where(F.col("p").isNotNull())
+        .groupBy("p")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
         .filter(F.size("ds") >= 2)
         .select(
@@ -18718,6 +18721,9 @@ _MODIFIED_FIRST: dict[str, int] = {
     # tagged min(rank) pre-aggregate) — same values on contract-clean
     # inputs, but the PLAN changed, so the green must postdate it.
     "retriever_rrf_fusion_topk": 10,
+    # r12: dedup_detector_pr's truth set no longer groups NULL prefixes
+    # together (≥2 NULL-text documents inflated n_truth by C(k,2)).
+    "dedup_detector_pr": 12,
 }
 
 

@@ -41,7 +41,7 @@ from unified_firmographic_data_pipeline_spark.operators.incremental import (
 )
 from unified_firmographic_data_pipeline_spark.operators.scd2 import VALID_FROM, scd2_current
 from unified_firmographic_data_pipeline_spark.plans.graph import Context, ModelGraph, model
-from unified_firmographic_data_pipeline_spark.quality.expect import expect
+from unified_firmographic_data_pipeline_spark.quality.expect import Expectation, expect
 
 GRAPH = ModelGraph()
 
@@ -62,14 +62,13 @@ FORTUNE_ITEM_SCHEMA = StructType(
 )
 
 
-def _wiki_tests(ctx: Context, df) -> None:
+def _wiki_tests(ctx: Context, df) -> Expectation:
     # stg_wiki_sp500.yml:8-35
-    (
+    return (
         expect(df)
         .not_null(["company_name", "symbol", "cik"])
         .unique(["company_name", "symbol", "cik"])
         .in_range("founded_year", 1700, 2100)
-        .run()
     )
 
 
@@ -119,9 +118,9 @@ def stg_wiki_sp500(ctx: Context):
     return dedup_first(cleaned, ["cik"], [F.col("date_added").asc_nulls_last(), "raw_id"])
 
 
-def _fortune_tests(ctx: Context, df) -> None:
+def _fortune_tests(ctx: Context, df) -> Expectation:
     # stg_fortune500.yml:7-131
-    (
+    return (
         expect(df)
         .not_null(["company_name", "slug"])
         .unique(["company_name"])
@@ -133,7 +132,6 @@ def _fortune_tests(ctx: Context, df) -> None:
         .in_range("change_rank_500", -500, 500)
         .in_range("change_rank_1000", -1000, 1000)
         .custom("profit_not_exceed_revenue", F.col("profits_m") > F.col("revenues_m"))
-        .run()
     )
 
 
@@ -218,9 +216,9 @@ CORE_COLUMNS = [
 ]
 
 
-def _core_tests(ctx: Context, df) -> None:
+def _core_tests(ctx: Context, df) -> Expectation:
     # cr_company_complete.yml:7-19
-    expect(df).not_null(["company_name", "cik"]).unique(["cik"]).run()
+    return expect(df).not_null(["company_name", "cik"]).unique(["cik"])
 
 
 @model(
@@ -301,8 +299,8 @@ def fortune_metrics_snapshot(ctx: Context):
     )
 
 
-def _dim_company_tests(ctx: Context, df) -> None:
-    expect(df).not_null(["company_key", "company_name"]).unique(["company_key"]).run()
+def _dim_company_tests(ctx: Context, df) -> Expectation:
+    return expect(df).not_null(["company_key", "company_name"]).unique(["company_key"])
 
 
 @model(GRAPH, schema="analytics", deps=("cr_company_complete",), tests=_dim_company_tests)
@@ -355,13 +353,12 @@ def dim_fortune_metrics(ctx: Context):
     )
 
 
-def _fact_tests(ctx: Context, df) -> None:
-    (
+def _fact_tests(ctx: Context, df) -> Expectation:
+    return (
         expect(df)
         .not_null(["company_key", "location_key", "fortune_metrics_key"])
         .fk("company_key", ctx.ref("dim_company"))
         .fk("location_key", ctx.ref("dim_location"))
-        .run()
     )
 
 

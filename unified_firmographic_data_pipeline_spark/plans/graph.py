@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from unified_firmographic_data_pipeline_spark.operators.incremental import upsert
 from unified_firmographic_data_pipeline_spark.operators.scd2 import scd2_apply
+from unified_firmographic_data_pipeline_spark.quality.expect import Expectation, expect
 from unified_firmographic_data_pipeline_spark.sources.catalog import Catalog
 
 
@@ -41,7 +42,8 @@ class ModelSpec:
     unique_key: tuple[str, ...] = ()
     scd2_key: str = ""
     scd2_updated_at: str = ""
-    tests: Callable[["Context", DataFrame], None] | None = None
+    # declares the model's checks: returns an unrun Expectation over df
+    tests: Callable[["Context", DataFrame], Expectation] | None = None
 
 
 @dataclass
@@ -110,50 +112,73 @@ class ModelGraph:
     ) -> dict[str, str]:
         """Execute models in dependency order; returns name -> status.
 
-        ``record_metadata=True`` appends one row per model to the
+        A model's ``tests(ctx, df)`` declares its checks on an Expectation
+        over ``df`` and returns it unrun. The runner attaches the row checks
+        and a row count to the frame it writes (``Expectation.observe``),
+        then runs the Expectation over the table as written: the row checks
+        come out of the write, the unique and fk checks run beside it.
+
+        ``record_metadata=True`` appends one row per model run to the
         ``_meta.run_metadata`` table (invocation_id, model, status, wall
-        seconds) — the engine analogue of the reference's dbt-artifact
-        upload partitioned by invocation_id (SURVEY.md §2.A A7,
-        ``DAG:66-107``)."""
+        seconds, rows written, error message) — the engine analogue of the
+        reference's dbt-artifact upload partitioned by invocation_id
+        (SURVEY.md §2.A A7, ``DAG:66-107``). The rows are written even when
+        a model raises: it gets status ``error`` and the run re-raises."""
         import time as _time
         import uuid as _uuid
 
         invocation_id = _uuid.uuid4().hex
-        timings: list[tuple[str, str, float]] = []
+        manifest: list[tuple] = []
         ctx = Context(spark=spark, catalog=catalog, graph=self)
         status: dict[str, str] = {}
-        for name in self.topo_order(select):
-            t0 = _time.perf_counter()
-            spec = self.models[name]
-            ctx.current = spec
-            df = spec.fn(ctx)
-            if spec.materialized == "table":
-                catalog.overwrite(df, spec.schema, name)
-            elif spec.materialized == "incremental":
-                existing = catalog.read_or_none(spec.schema, name)
-                merged = upsert(existing, df, list(spec.unique_key))
-                catalog.overwrite(merged, spec.schema, name)
-            elif spec.materialized == "snapshot":
-                existing = catalog.read_or_none(spec.schema, name)
-                snap = scd2_apply(existing, df, spec.scd2_key, spec.scd2_updated_at)
-                catalog.overwrite(snap, spec.schema, name)
-            elif spec.materialized == "ephemeral":
-                # nothing written: downstream ref() inlines the logical plan
-                ctx._ephemeral_cache[name] = df
-            else:
-                raise ValueError(f"unknown materialization {spec.materialized}")
-            if run_tests and spec.tests is not None:
-                tested = df if spec.materialized == "ephemeral" else catalog.read(spec.schema, name)
-                spec.tests(ctx, tested)
-            status[name] = "ok"
-            timings.append((name, "ok", _time.perf_counter() - t0))
-        if record_metadata:
-            meta_df = spark.createDataFrame(
-                [(invocation_id, n, s, float(t)) for n, s, t in timings],
-                "invocation_id string, model string, status string, wall_sec double",
-            )
-            catalog.append(meta_df, "_meta", "run_metadata")
+        try:
+            for name in self.topo_order(select):
+                t0 = _time.perf_counter()
+                spec = self.models[name]
+                ctx.current = spec
+                state, rows, message = "error", None, None
+                try:
+                    df = spec.fn(ctx)
+                    checks = spec.tests(ctx, df) if run_tests and spec.tests is not None else expect(df)
+                    if spec.materialized == "ephemeral":
+                        # nothing written: downstream ref() inlines the logical plan
+                        ctx._ephemeral_cache[name] = df
+                    else:
+                        catalog.overwrite(checks.observe(_target(ctx, spec, df)), spec.schema, name)
+                        rows = checks.observed_rows
+                        if checks.checks:
+                            checks.df = catalog.read(spec.schema, name)
+                    checks.run()
+                    state = status[name] = "ok"
+                except Exception as e:
+                    message = f"{type(e).__name__}: {e}"
+                    raise
+                finally:
+                    manifest.append(
+                        (invocation_id, name, state, _time.perf_counter() - t0, rows, message)
+                    )
+        finally:
+            if record_metadata and manifest:
+                meta_df = spark.createDataFrame(
+                    manifest,
+                    "invocation_id string, model string, status string, wall_sec double,"
+                    " rows long, message string",
+                )
+                catalog.append(meta_df, "_meta", "run_metadata")
         return status
+
+
+def _target(ctx: Context, spec: ModelSpec, df: DataFrame) -> DataFrame:
+    """The frame that materializes ``df`` as ``spec`` says: the model's own
+    result, its keyed upsert into the prior table, or its SCD2 fold."""
+    if spec.materialized == "table":
+        return df
+    existing = ctx.catalog.read_or_none(spec.schema, spec.name)
+    if spec.materialized == "incremental":
+        return upsert(existing, df, list(spec.unique_key))
+    if spec.materialized == "snapshot":
+        return scd2_apply(existing, df, spec.scd2_key, spec.scd2_updated_at)
+    raise ValueError(f"unknown materialization {spec.materialized}")
 
 
 def model(
@@ -165,7 +190,7 @@ def model(
     unique_key: tuple[str, ...] = (),
     scd2_key: str = "",
     scd2_updated_at: str = "",
-    tests: Callable[[Context, DataFrame], None] | None = None,
+    tests: Callable[[Context, DataFrame], Expectation] | None = None,
 ) -> Callable:
     """Decorator registering a model function under its own name."""
 

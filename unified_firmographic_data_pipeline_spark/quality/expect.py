@@ -6,17 +6,24 @@ Reference test taxonomy (SURVEY.md §5): ``not_null``, ``unique``,
 check is a SELECT of violating rows; pass = 0 violations; ``run()`` raises
 (gating downstream models, like dbt test gates the DAG — ``DAG:201``).
 
-Every check counts violations in a single aggregate job; ``run()`` batches
-them so N checks cost one pass per underlying frame, not N actions, which is
-what makes the suite usable on 100 TB tables.
+What the checks cost, in Spark actions:
+
+- row checks (``not_null``, ``in_range``, ``accepted``, ``custom``) are
+  violation-count aggregates. ``observe(df)`` attaches all of them to the
+  frame about to be written, so they are counted by the write itself and
+  cost no job; without it, ``run()`` counts them in one aggregate pass.
+- all ``unique`` checks of one Expectation run as ONE action over the
+  frame: a GROUP BY per key, unioned; one job per key plus one.
+- each ``fk`` check is its own anti-join action.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -27,19 +34,20 @@ class QualityError(AssertionError):
 @dataclass
 class _Check:
     name: str
-    # violation count expression evaluated over the base frame, OR a
-    # standalone counting thunk for checks needing their own plan (unique/fk)
+    # row check: violation count aggregated over the frame's rows
     agg: Column | None = None
-    thunk: object | None = None
-    # lazy builder returning a 1-row DataFrame with BIGINT column `n` —
-    # the plan-native twin of `thunk`, used by report()
-    frame: object | None = None
+    # unique check: the key column
+    unique: str | None = None
+    # fk check: (key, dimension frame, dimension key)
+    fk: tuple[str, DataFrame, str] | None = None
 
 
 @dataclass
 class Expectation:
     df: DataFrame
     checks: list[_Check] = field(default_factory=list)
+    # set by observe(): the row checks and the row count of one write
+    _observation: Observation | None = field(default=None, init=False, repr=False)
 
     # -- generic tests ------------------------------------------------------
     def not_null(self, cols: Sequence[str]) -> "Expectation":
@@ -50,48 +58,16 @@ class Expectation:
         return self
 
     def unique(self, cols: Sequence[str]) -> "Expectation":
-        """dbt ``unique``: GROUP BY col HAVING count(*) > 1 (SURVEY §2.H H2)."""
+        """dbt ``unique``: GROUP BY col HAVING count(*) > 1 (SURVEY §2.H H2).
+        A NULL key occurring twice is a duplicate group too."""
         for c in cols:
-            df = self.df
-
-            def _count(df=df, c=c) -> int:
-                return (
-                    df.groupBy(c).count().filter(F.col("count") > 1).limit(1).count()
-                )
-
-            def _frame(df=df, c=c) -> DataFrame:
-                return (
-                    df.groupBy(c)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .agg(F.count("*").cast("long").alias("n"))
-                )
-
-            self.checks.append(_Check(f"unique({c})", thunk=_count, frame=_frame))
+            self.checks.append(_Check(f"unique({c})", unique=c))
         return self
 
     def fk(self, key: str, dim: DataFrame, dim_key: str | None = None) -> "Expectation":
         """dbt ``relationships``: every fact key exists in the dimension
         (left-anti join count — SURVEY §2.C C2)."""
-        dim_key = dim_key or key
-        df = self.df
-
-        def _count(df=df, key=key, dim=dim, dim_key=dim_key) -> int:
-            return (
-                df.select(F.col(key)).where(F.col(key).isNotNull())
-                .join(dim.select(F.col(dim_key).alias(key)), key, "left_anti")
-                .limit(1)
-                .count()
-            )
-
-        def _frame(df=df, key=key, dim=dim, dim_key=dim_key) -> DataFrame:
-            return (
-                df.select(F.col(key)).where(F.col(key).isNotNull())
-                .join(dim.select(F.col(dim_key).alias(key)), key, "left_anti")
-                .agg(F.count("*").cast("long").alias("n"))
-            )
-
-        self.checks.append(_Check(f"fk({key})", thunk=_count, frame=_frame))
+        self.checks.append(_Check(f"fk({key})", fk=(key, dim, dim_key or key)))
         return self
 
     def accepted(self, col: str, values: Sequence) -> "Expectation":
@@ -115,21 +91,69 @@ class Expectation:
         self.checks.append(_Check(name, agg=F.count(F.when(violation, 1))))
         return self
 
+    # -- plans --------------------------------------------------------------
+    def _row_checks(self) -> list[_Check]:
+        return [c for c in self.checks if c.agg is not None]
+
+    def _row_aggs(self) -> list[Column]:
+        return [c.agg.cast("long").alias(f"c{i}") for i, c in enumerate(self._row_checks())]
+
+    def _duplicate_groups(self, c: str) -> DataFrame:
+        return self.df.groupBy(c).count().filter(F.col("count") > 1)
+
+    def _orphans(self, check: _Check) -> DataFrame:
+        key, dim, dim_key = check.fk
+        return (
+            self.df.select(F.col(key)).where(F.col(key).isNotNull())
+            .join(dim.select(F.col(dim_key).alias(key)), key, "left_anti")
+        )
+
+    def _unique_failures(self, checks: list[_Check]) -> dict[str, int]:
+        """Duplicate-group counts of every unique key in one action: the
+        keys' duplicate groups are unioned and counted per check by an
+        Observation on a no-op write. Each key keeps the shuffle of its own
+        GROUP BY (the same bytes as a separate check) and adds one map-stage
+        job; the action adds one job, not one per check."""
+        dups = [self._duplicate_groups(c.unique).select(F.lit(i).alias("i")) for i, c in enumerate(checks)]
+        obs = Observation()
+        (
+            functools.reduce(DataFrame.unionByName, dups)
+            .observe(obs, *[F.count(F.when(F.col("i") == i, 1)).alias(f"u{i}") for i in range(len(checks))])
+            .write.format("noop").mode("overwrite").save()
+        )
+        got = obs.get
+        return {c.name: got[f"u{i}"] for i, c in enumerate(checks)}
+
     # -- execution ----------------------------------------------------------
+    def observe(self, df: DataFrame) -> DataFrame:
+        """Attach the row checks, plus a row count, to ``df`` — the frame
+        about to be written — as one Observation. The write then counts
+        them, and ``run()`` reads them from it instead of scanning; the
+        unique and fk checks still run over ``self.df``. Declare every check
+        before calling this."""
+        self._observation = Observation()
+        return df.observe(self._observation, F.count(F.lit(1)).alias("rows"), *self._row_aggs())
+
+    @property
+    def observed_rows(self) -> int:
+        """Rows counted by the observed write (blocks until it has run)."""
+        return self._observation.get["rows"]
+
     def collect_failures(self) -> dict[str, int]:
         failures: dict[str, int] = {}
-        agg_checks = [c for c in self.checks if c.agg is not None]
-        if agg_checks:
-            row = self.df.agg(
-                *[c.agg.alias(f"c{i}") for i, c in enumerate(agg_checks)]
-            ).first()
-            for i, c in enumerate(agg_checks):
-                n = row[f"c{i}"]
-                if n:
-                    failures[c.name] = n
+        rows = self._row_checks()
+        if rows:
+            if self._observation is not None:
+                got = self._observation.get
+            else:
+                got = self.df.agg(*self._row_aggs()).first().asDict()
+            failures.update({c.name: got[f"c{i}"] for i, c in enumerate(rows) if got[f"c{i}"]})
+        uniques = [c for c in self.checks if c.unique is not None]
+        if uniques:
+            failures.update({k: n for k, n in self._unique_failures(uniques).items() if n})
         for c in self.checks:
-            if c.thunk is not None:
-                n = c.thunk()
+            if c.fk is not None:
+                n = self._orphans(c).limit(1).count()
                 if n:
                     failures[c.name] = n
         return failures
@@ -148,37 +172,30 @@ class Expectation:
         test, n_violations, passed) with a row per registered check.
         All expression checks fold into a single aggregate pass over the
         base frame (then melt via stack); unique/fk contribute their own
-        1-row count plans — so N checks still cost one job per
-        underlying plan when the union executes, the same batching
-        contract as run()."""
+        1-row count plans, unioned into the one report."""
         frames: list[DataFrame] = []
-        agg_checks = [c for c in self.checks if c.agg is not None]
-        if agg_checks:
-            one = self.df.agg(
-                *[c.agg.cast("long").alias(f"c{i}") for i, c in enumerate(agg_checks)]
-            )
+        rows = self._row_checks()
+        if rows:
             pairs = ", ".join(
-                "'" + c.name.replace("'", "") + f"', c{i}"
-                for i, c in enumerate(agg_checks)
+                "'" + c.name.replace("'", "") + f"', c{i}" for i, c in enumerate(rows)
             )
             frames.append(
-                one.select(
-                    F.expr(
-                        f"stack({len(agg_checks)}, {pairs}) AS (test, n_violations)"
-                    )
+                self.df.agg(*self._row_aggs()).select(
+                    F.expr(f"stack({len(rows)}, {pairs}) AS (test, n_violations)")
                 )
             )
         for c in self.checks:
-            if c.frame is not None:
-                frames.append(
-                    c.frame().select(
-                        F.lit(c.name).alias("test"),
-                        F.col("n").alias("n_violations"),
-                    )
+            if c.agg is not None:
+                continue
+            bad = self._duplicate_groups(c.unique) if c.unique is not None else self._orphans(c)
+            frames.append(
+                bad.agg(F.count("*").cast("long").alias("n_violations")).select(
+                    F.lit(c.name).alias("test"), "n_violations"
                 )
+            )
         if not frames:
-            # no registered checks (or none with an agg/frame): an empty
-            # report with the contract schema, not an IndexError
+            # no registered checks: an empty report with the contract
+            # schema, not an IndexError
             return self.df.sparkSession.createDataFrame(
                 [], "table string, test string, n_violations long, passed boolean"
             )

@@ -1,13 +1,19 @@
-"""Zero-extra-pass data quality via ``df.observe``.
+"""Zero-extra-pass data quality via ``df.observe``, for writes outside the
+model runner.
 
-``quality.expect`` runs its checks as a dedicated aggregate job — one more
-full scan of the frame. At 100 TB that extra scan is real money. This module
-piggybacks the same violation-count aggregates on whatever action
-materializes the frame (the table write itself): ``Observation`` metrics are
-accumulated by the running tasks, so quality comes out of the write for
-free.
+A check that runs as its own aggregate job costs one more full scan of the
+frame. At 100 TB that extra scan is real money. ``df.observe`` piggybacks
+the violation-count aggregates on whatever action materializes the frame
+(the table write itself): ``Observation`` metrics are accumulated by the
+running tasks, so quality comes out of the write for free.
 
-    df, obs = observe_expectations(df, not_null=["k"], unique=None,
+Division of labour: the model runner (``plans/graph.py``) already does this
+for every model through ``Expectation.observe`` — the row checks a model's
+``tests`` declare ride its write, and ``Expectation.run`` adds the unique
+and fk checks over the table as written. This module is the standalone form
+for any other write (an ad-hoc job, a streaming sink):
+
+    df, obs = observe_expectations(df, not_null=["k"],
                                    custom={"neg_v": F.col("v") < 0})
     df.write.parquet(path)            # the one and only pass
     assert_observed(obs)              # raises QualityError on violations

@@ -14,11 +14,14 @@ MERGE/REPLACE and inherit ACID)."""
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql.types import StructType
 
 
 def fs_exists(spark: SparkSession, path: str) -> bool:
@@ -37,6 +40,16 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
         return bool(p.getFileSystem(jconf).exists(p))
     except AttributeError:
         return os.path.exists(path)
+
+
+def _save(writer: DataFrameWriter, fmt: str, path: str) -> None:
+    """Finish ``writer`` in one of the CATALOG_FORMATS."""
+    if fmt == "csv":
+        writer.option("header", "true").csv(path)
+    elif fmt == "xml":
+        writer.format("xml").option("rootTag", "rows").option("rowTag", "row").save(path)
+    else:
+        getattr(writer, fmt)(path)
 
 
 def atomic_swap_write(
@@ -67,12 +80,7 @@ def atomic_swap_write(
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if fmt == "csv":
-        writer.option("header", "true").csv(tmp)
-    elif fmt == "xml":
-        writer.format("xml").option("rootTag", "rows").option("rowTag", "row").save(tmp)
-    else:
-        getattr(writer, fmt)(tmp)
+    _save(writer, fmt, tmp)
     old = final + ".old-" + uuid.uuid4().hex[:8]
     if os.path.exists(final):
         os.replace(final, old)
@@ -84,18 +92,57 @@ def atomic_swap_write(
 #: Formats the catalog can serve. Parquet is the default/perf tier (column
 #: pruning + predicate pushdown + page stats); ORC is the columnar
 #: alternative with the same pushdown story; JSON/CSV are interchange
-#: tiers — schema round-trips via an embedded `_schema.json` sidecar since
-#: the formats carry none (CSV) or lossy (JSON: everything widens) types.
-#: XML (native in Spark 4) is the same sidecar-restored interchange tier,
+#: tiers whose types round-trip only through the schema record (the
+#: formats carry none (CSV) or lossy (JSON: everything widens) types).
+#: XML (native in Spark 4) is the same record-restored interchange tier,
 #: for feeds that land as XML (SEC filings, sitemap dumps, RSS).
 CATALOG_FORMATS = ("parquet", "orc", "json", "csv", "xml")
+
+
+def _as_read(st: StructType) -> StructType:
+    """``st`` as a file source reads it back: every field, array element and
+    map value nullable."""
+
+    def loosen(node):
+        if isinstance(node, dict):
+            out = {k: loosen(v) for k, v in node.items()}
+            for flag in ("nullable", "containsNull", "valueContainsNull"):
+                if flag in out:
+                    out[flag] = True
+            return out
+        if isinstance(node, list):
+            return [loosen(v) for v in node]
+        return node
+
+    return StructType.fromJson(loosen(st.jsonValue()))
+
+
+def _listing(path: str) -> str:
+    """Digest of the (relative path, size) of every visible file under
+    ``path``: any file landed, removed or rewritten there changes it."""
+    entries = []
+    for d, dirs, files in os.walk(path):
+        dirs[:] = [x for x in dirs if not x.startswith(".")]
+        for f in files:
+            if not f.startswith("."):
+                full = os.path.join(d, f)
+                entries.append((os.path.relpath(full, path), os.path.getsize(full)))
+    return hashlib.sha256(json.dumps(sorted(entries)).encode()).hexdigest()
 
 
 class Catalog:
     """Path-addressed table catalog rooted at ``root``; schema/table
     naming mirrors the reference's RAW/STAGING/CORE/ANALYTICS layout
     (reference README.md:520-527). ``fmt`` selects the storage format
-    (default parquet; see CATALOG_FORMATS)."""
+    (default parquet; see CATALOG_FORMATS).
+
+    Every write records the schema it wrote in a ``<table>._schema.json``
+    sidecar, together with a digest of the table directory's file listing.
+    ``read`` hands a record that still matches the directory to the reader,
+    so Spark runs no schema-inference job (one per read on parquet) and the
+    interchange formats keep their exact types. A table changed outside
+    the catalog (a RAW file copied in, a compaction) no longer matches its
+    record and is read with inference."""
 
     def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
         if fmt not in CATALOG_FORMATS:
@@ -120,26 +167,53 @@ class Catalog:
     def _schema_sidecar(self, schema: str, table: str) -> str:
         return self.path(schema, table) + "._schema.json"
 
-    def read(self, schema: str, table: str) -> DataFrame:
-        p = self.path(schema, table)
-        if self.fmt == "parquet":
-            return self.spark.read.parquet(p)
-        if self.fmt == "orc":
-            return self.spark.read.orc(p)
-        # schema-free interchange formats: restore exact types from the
-        # sidecar written at overwrite time (header-only CSV inference
-        # would widen ints/timestamps; JSON loses decimals and dates)
-        from pyspark.sql.types import StructType
+    def recorded_schema(self, schema: str, table: str) -> StructType | None:
+        """The schema the catalog last wrote to this table, or None when
+        there is no record or the directory changed since it was made."""
+        try:
+            with open(self._schema_sidecar(schema, table), encoding="utf-8") as fh:
+                rec = json.load(fh)
+        except FileNotFoundError:
+            return None
+        if rec.get("listing") != _listing(self.path(schema, table)):
+            return None
+        return StructType.fromJson(rec["schema"])
 
-        with open(self._schema_sidecar(schema, table), encoding="utf-8") as fh:
-            st = StructType.fromJson(__import__("json").load(fh))
-        if self.fmt == "json":
-            return self.spark.read.schema(st).json(p)
+    def _record(self, schema: str, table: str, st: StructType | None) -> None:
+        """Record ``st`` as the table's schema as of its current listing;
+        ``None`` drops the record, so readers infer."""
+        side = self._schema_sidecar(schema, table)
+        if st is None:
+            if os.path.exists(side):
+                os.remove(side)
+            return
+        rec = {"schema": _as_read(st).jsonValue(), "listing": _listing(self.path(schema, table))}
+        tmp = side + ".tmp"
+        with open(tmp, "w", encoding="utf-8") as fh:
+            json.dump(rec, fh)
+        os.replace(tmp, side)
+
+    def _record_after_merge(self, schema: str, table: str, st: StructType, write) -> None:
+        """Run ``write``, which adds rows of schema ``st`` to the table, and
+        keep a record only when the table is new or was recorded with ``st``."""
+        keep = (
+            not os.path.isdir(self.path(schema, table))
+            or self.recorded_schema(schema, table) == _as_read(st)
+        )
+        write()
+        self._record(schema, table, st if keep else None)
+
+    def read(self, schema: str, table: str) -> DataFrame:
+        reader = self.spark.read
+        st = self.recorded_schema(schema, table)
+        if st is not None:
+            reader = reader.schema(st)
+        p = self.path(schema, table)
+        if self.fmt == "csv":
+            return reader.option("header", "true").csv(p)
         if self.fmt == "xml":
-            return (
-                self.spark.read.schema(st).format("xml").option("rowTag", "row").load(p)
-            )
-        return self.spark.read.schema(st).option("header", "true").csv(p)
+            return reader.format("xml").option("rowTag", "row").load(p)
+        return getattr(reader, self.fmt)(p)
 
     def read_or_none(self, schema: str, table: str) -> DataFrame | None:
         return self.read(schema, table) if self.exists(schema, table) else None
@@ -150,22 +224,13 @@ class Catalog:
         computing the new one) requires this — a direct overwrite would
         truncate its own input before reading it."""
         atomic_swap_write(df, self.path(schema, table), partition_by, fmt=self.fmt)
-        if self.fmt in ("json", "csv", "xml"):
-            import json as _json
-
-            with open(self._schema_sidecar(schema, table), "w", encoding="utf-8") as fh:
-                _json.dump(df.schema.jsonValue(), fh)
+        self._record(schema, table, df.schema)
 
     def append(self, df: DataFrame, schema: str, table: str) -> None:
-        w = df.write.mode("append")
-        if self.fmt == "csv":
-            w.option("header", "true").csv(self.path(schema, table))
-        elif self.fmt == "xml":
-            w.format("xml").option("rootTag", "rows").option("rowTag", "row").save(
-                self.path(schema, table)
-            )
-        else:
-            getattr(w, self.fmt)(self.path(schema, table))
+        self._record_after_merge(
+            schema, table, df.schema,
+            lambda: _save(df.write.mode("append"), self.fmt, self.path(schema, table)),
+        )
 
     def overwrite_partitions(
         self, df: DataFrame, schema: str, table: str, partition_by: list[str]
@@ -183,19 +248,9 @@ class Catalog:
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_by)
         )
-        if self.fmt == "csv":
-            w.option("header", "true").csv(self.path(schema, table))
-        elif self.fmt == "xml":
-            w.format("xml").option("rootTag", "rows").option("rowTag", "row").save(
-                self.path(schema, table)
-            )
-        else:
-            getattr(w, self.fmt)(self.path(schema, table))
-        if self.fmt in ("json", "csv", "xml"):
-            import json as _json
-
-            with open(self._schema_sidecar(schema, table), "w", encoding="utf-8") as fh:
-                _json.dump(df.schema.jsonValue(), fh)
+        self._record_after_merge(
+            schema, table, df.schema, lambda: _save(w, self.fmt, self.path(schema, table))
+        )
 
 
 def write_bucketed(
