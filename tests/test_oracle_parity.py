@@ -168,16 +168,17 @@ def test_driver_registration_order():
     # 1c. EXPIRY: an entry re-verified green in the modification round or
     #     later must NOT occupy a front slot — it sits in the verified
     #     middle like any other green query (round-5 judge finding #1:
-    #     the r4 json-gate rewrites and r5 triangle-switch entries were
-    #     re-verified green in CORRECTNESS_r05, so they must no longer
-    #     hoist). The historical entries double as a regression fixture.
+    #     the r4 json-gate rewrites were re-verified green in
+    #     CORRECTNESS_r05 and the r6 HLL oracle in CORRECTNESS_r06, so they
+    #     must no longer hoist). The historical entries double as a
+    #     regression fixture.
     expired = [
         n
         for n, rnd in dq._MODIFIED_FIRST.items()
         if n in ORACLES and rounds_map.get(n, -1) >= rnd
     ]
-    assert {"variant_lateral_flatten", "triangle_stats_copurchase"} <= set(expired), (
-        "fixture drift: the r4/r5 re-verified entries should be expired"
+    assert {"variant_lateral_flatten", "approx_distinct_hll"} <= set(expired), (
+        "fixture drift: the r4/r6 re-verified entries should be expired"
     )
     for n in expired:
         assert n in names[len(unverified) :], (

@@ -146,6 +146,21 @@ def test_append_and_partition_overwrite_keep_no_stale_record(spark, tmp_path):
     assert cat.read("core", "part").count() == 3
 
 
+def test_partition_only_table_exists(spark, tmp_path):
+    # dynamic partition overwrite leaves only `day=d1/` at the top level:
+    # no data file and no _SUCCESS marker
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    assert not cat.exists("core", "part")
+    assert cat.read_or_none("core", "part") is None
+    cat.overwrite_partitions(
+        spark.createDataFrame([(1, "d1"), (2, "d1")], "id long, day string"), "core", "part", ["day"]
+    )
+    assert sorted(os.listdir(cat.path("core", "part"))) == ["day=d1"]
+    assert cat.exists("core", "part")
+    got = cat.read_or_none("core", "part")
+    assert sorted((r.id, r.day) for r in got.collect()) == [(1, "d1"), (2, "d1")]
+
+
 def test_manifest_survives_a_failing_model(spark, tmp_path):
     g = ModelGraph()
     cat = Catalog(spark, str(tmp_path / "wh"))

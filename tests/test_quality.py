@@ -81,39 +81,24 @@ def test_passes_boolean(clean, dirty):
 # ---------------------------------------------------------------- observe ----
 
 def test_observed_expectations_pass(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from unified_firmographic_data_pipeline_spark.quality.observe import (
-        assert_observed,
-        observe_expectations,
-    )
-
     df = spark.createDataFrame([(1, "a", 5.0), (2, "b", 7.0)], ["k", "s", "v"])
-    inst, obs = observe_expectations(
-        df,
-        not_null=["k", "s"],
-        accepted={"s": ["a", "b"]},
-        in_range={"v": (0, 10)},
-        custom={"v_gt_k": F.col("v") < F.col("k")},
+    e = (
+        expect(df)
+        .not_null(["k", "s"])
+        .accepted("s", ["a", "b"])
+        .in_range("v", 0, 10)
+        .custom("v_gt_k", F.col("v") < F.col("k"))
     )
-    inst.write.mode("overwrite").parquet(str(tmp_path / "out"))  # the only pass
-    got = assert_observed(obs)
-    assert got["__rows"] == 2
+    e.observe(df).write.mode("overwrite").parquet(str(tmp_path / "out"))  # the only pass
+    e.run()
+    assert e.observed_rows == 2
 
 
 def test_observed_expectations_fail(spark, tmp_path):
-    from unified_firmographic_data_pipeline_spark.quality.expect import QualityError
-    from unified_firmographic_data_pipeline_spark.quality.observe import (
-        assert_observed,
-        observe_expectations,
-    )
-
     df = spark.createDataFrame([(1, None, 50.0), (None, "b", 7.0)], "k long, s string, v double")
-    inst, obs = observe_expectations(df, not_null=["k", "s"], in_range={"v": (0, 10)})
-    inst.write.mode("overwrite").parquet(str(tmp_path / "out2"))
-    try:
-        assert_observed(obs)
-        raise AssertionError("expected QualityError")
-    except QualityError as e:
-        msg = str(e)
-        assert "null__k: 1" in msg and "null__s: 1" in msg and "range__v: 1" in msg
+    e = expect(df).not_null(["k", "s"]).in_range("v", 0, 10)
+    e.observe(df).write.mode("overwrite").parquet(str(tmp_path / "out2"))
+    with pytest.raises(QualityError) as err:
+        e.run()
+    msg = str(err.value)
+    assert "not_null(k): 1" in msg and "not_null(s): 1" in msg and "in_range(v): 1" in msg

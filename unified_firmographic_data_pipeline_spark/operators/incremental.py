@@ -23,7 +23,7 @@ import json
 import os
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -211,12 +211,6 @@ class WatermarkStore:
         if fs.exists(jdst):
             fs.delete(jdst, False)
         fs.rename(jtmp, jdst)
-
-
-def violation_filter(df: DataFrame, condition: Column) -> DataFrame:
-    """B6: rows violating a business rule (test passes iff empty) —
-    ``tests/test_fortune_profit_not_exceed_revenue.sql:3-6`` analogue."""
-    return df.filter(condition)
 
 
 # -- incremental aggregate maintenance ------------------------------------

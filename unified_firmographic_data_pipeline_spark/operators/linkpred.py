@@ -8,17 +8,15 @@ firmographics_dbt/models/star/dim_company.sql joins; the scoring
 itself is the classic Adamic-Adar similarity from public literature).
 
 Scale design (100 TB):
-- Wedges are generated MAP-SIDE from per-center sorted neighbor
-  arrays (``posexplode`` + ``slice``), the same one-shuffle rewrite the
-  basket pair-mining uses — never an adjacency self-join, which would
-  shuffle the adjacency twice and re-explode hot centers.
-- Hub centers are pruned at ``hub_cap`` BEFORE pair fan-out: a center
-  of degree d emits d*(d-1)/2 wedges, so an unbounded hub dominates the
-  job quadratically while each wedge it emits carries the *minimum*
-  possible Adamic-Adar weight (1/ln d). Capping is therefore both the
-  standard scale fix and nearly lossless for the score ranking; the cap
-  is part of the operator's declared semantics so the oracle can mirror
-  it exactly.
+- Wedges are :func:`~.pairs.group_pairs` over each center's neighbors,
+  the fan-out the basket pair-mining uses — never an adjacency self-join.
+- Hub centers are dropped at ``hub_cap`` (``group_pairs``'
+  ``max_group``): a center of degree d emits d*(d-1)/2 wedges, so an
+  unbounded hub dominates the job quadratically while each wedge it
+  emits carries the *minimum* possible Adamic-Adar weight (1/ln d).
+  Capping is therefore both the standard scale fix and nearly lossless
+  for the score ranking; the cap is part of the operator's declared
+  semantics so the oracle can mirror it exactly.
 - Per-wedge weights micro-round to BIGINT before the sum
   (addition-order-free cross-engine totals; see driver_queries
   docstring).
@@ -26,8 +24,10 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from unified_firmographic_data_pipeline_spark.operators.pairs import group_pairs
 
 
 def adamic_adar_topk(
@@ -49,25 +49,13 @@ def adamic_adar_topk(
     adj = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr")).unionAll(
         edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
     )
-
-    # Per-center neighbor lists, hub-pruned BEFORE the quadratic fan-out.
-    # The list size IS the center's degree (adjacency is symmetric and
+    # The group size IS the center's degree (adjacency is symmetric and
     # deduped), so no separate degree join is needed.
-    centers = (
-        adj.groupBy("nbr")
-        .agg(F.sort_array(F.collect_set("node")).alias("ns"))
-        .filter((F.size("ns") >= 2) & (F.size("ns") <= hub_cap))
-    )
-    w_micro = F.round(F.lit(1e6) / F.log(F.size("ns").cast("double"))).cast("long")
-    left = centers.select(
-        "ns", w_micro.alias("w"), F.posexplode("ns").alias("i", "a")
-    )
-    wedges = left.select(
-        "a", F.explode(F.expr("slice(ns, i + 2, size(ns))")).alias("b"), "w"
-    )
+    wedges = group_pairs(adj, "nbr", "node", max_group=hub_cap)
+    w_micro = F.round(F.lit(1e6) / F.log(F.col("group_size").cast("double"))).cast("long")
     scored = wedges.groupBy("a", "b").agg(
         F.count("*").cast("long").alias("common_neighbors"),
-        F.sum("w").alias("aa_micro"),
+        F.sum(w_micro).alias("aa_micro"),
     )
     non_adjacent = scored.join(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),

@@ -84,15 +84,6 @@ def _orient(und: DataFrame, deg: DataFrame) -> DataFrame:
     )
 
 
-def orient_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Degree-orient an undirected edge set: returns ``(lo, hi)`` rows with
-    each undirected edge appearing once, directed from the endpoint with
-    smaller (degree, id) to the larger. Input may contain (a,b) either way
-    or both ways; self-loops are dropped."""
-    und = _canonical_undirected(edges, src, dst)
-    return _orient(und, _degrees(und))
-
-
 def _oriented_wedges(ori: DataFrame) -> DataFrame:
     """All oriented wedges ``(pivot, x, y)`` with x < y, via the pivot-key
     self-join of the oriented edge list. The oriented frame is exchanged

@@ -58,6 +58,7 @@ from unified_firmographic_data_pipeline_spark.operators.neardup import (
     simhash_near_pairs,
     winnow_overlap_pairs,
 )
+from unified_firmographic_data_pipeline_spark.operators.pairs import group_pairs
 from unified_firmographic_data_pipeline_spark.operators.similarity import cosine_topk
 from unified_firmographic_data_pipeline_spark.sources.multimodal import media_from_text
 from unified_firmographic_data_pipeline_spark.streaming.ingest import windowed_counts_batch
@@ -2945,18 +2946,11 @@ def tfidf_top_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _chunk_fp_pairs(d: DataFrame) -> DataFrame:
     """Candidate near-dup pairs ``(src, dst)`` with src < dst: documents
-    sharing a 10-token chunk fingerprint.
-
-    Round-11 shape: pairs generate MAP-SIDE from each fingerprint's sorted
-    doc-id group (groupBy + collect_set + slice fan-out — the measured
-    market_basket plan) instead of the chunks⋈chunks self-join. Three
-    structural wins: the tokenize+chunk+md5 subtree is evaluated ONCE (the
-    self-join's two aliases each replayed it), the chunk stream crosses the
-    network once instead of twice, and singleton fingerprints — the vast
-    majority — are dropped by the size gate before any pair work (guide
-    §2.4/§3). Emitting each unordered pair once (the old join emitted both
-    directions) is equivalent for every consumer: connected_components
-    symmetrizes its edge input internally."""
+    sharing a 10-token chunk fingerprint, by ``group_pairs`` on the
+    fingerprint instead of the chunks⋈chunks self-join (whose two aliases
+    each replayed the tokenize+chunk+md5 subtree). Emitting each unordered
+    pair once (the oracle's join emits both directions) is equivalent for
+    every consumer: connected_components symmetrizes its edge input."""
     from unified_firmographic_data_pipeline_spark.operators.curation import token_chunks
 
     chunks = (
@@ -2970,19 +2964,8 @@ def _chunk_fp_pairs(d: DataFrame) -> DataFrame:
         .select("doc_id", F.md5("chunk").alias("chunk_fp"))
     )
     return (
-        chunks.groupBy("chunk_fp")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds) - i - 1),"
-                    " y -> struct(x AS x, y AS y))))"
-                )
-            ).alias("pr")
-        )
-        .select(F.col("pr.x").alias("src"), F.col("pr.y").alias("dst"))
+        group_pairs(chunks, "chunk_fp", "doc_id")
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .distinct()
     )
 
@@ -3949,24 +3932,14 @@ def grouped_median_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket co-occurrence (association-rule support counts). The
-    oracle's self-join on l_orderkey is the textbook shape but shuffles
-    lineitem TWICE and explodes skewed orders; here baskets are aggregated
-    once (sorted part array per order) and pairs are generated MAP-SIDE from
-    each array (``posexplode`` + ``slice``) — one shuffle to build baskets,
-    one to count pairs, no self-join. Per-order fan-out is k(k-1)/2 with the
-    small per-order k, not data-size-dependent."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    left = baskets.select("parts", F.posexplode("parts").alias("i", "p1"))
-    pairs = left.select(
-        "p1", F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("p2")
-    )
+    """Market-basket co-occurrence (association-rule support counts): the
+    co-purchase pair counts of ``_copurchase_edges_counted`` — one shuffle
+    to build baskets, one to count pairs, no self-join."""
     return (
-        pairs.groupBy("p1", "p2")
-        .agg(F.count("*").alias("n_orders"))
+        _copurchase_edges_counted(_t(spark, sf_dir, "lineitem"))
+        .select(
+            F.col("src").alias("p1"), F.col("dst").alias("p2"), F.col("n_co").alias("n_orders")
+        )
         .orderBy(F.col("n_orders").desc(), "p1", "p2")
         .limit(30)
     )
@@ -5452,25 +5425,16 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def basket_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association-rule metrics over the basket pairs: support count,
     confidence P(p2|p1) and lift (observed/independent co-occurrence) —
-    every ratio a fixed expression of exact integers. Pair generation uses
-    the map-side array shape from market_basket_pairs; the item-frequency
-    table is part-bounded and the basket total enters as a 1-row
-    broadcast."""
+    every ratio a fixed expression of exact integers. Pair counts come from
+    ``_copurchase_edges_counted``; the item-frequency table is
+    part-bounded and the basket total enters as a 1-row broadcast."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     n_baskets = li.select(
         F.count_distinct("l_orderkey").alias("n_baskets")
     )
     item = li.groupBy("l_partkey").agg(F.count("*").alias("n_item"))
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    left = baskets.select("parts", F.posexplode("parts").alias("i", "p1"))
-    pair = (
-        left.select(
-            "p1", F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("p2")
-        )
-        .groupBy("p1", "p2")
-        .agg(F.count("*").alias("n_pair"))
+    pair = _copurchase_edges_counted(li).select(
+        F.col("src").alias("p1"), F.col("dst").alias("p2"), F.col("n_co").alias("n_pair")
     )
     i1 = item.select(F.col("l_partkey").alias("p1"), F.col("n_item").alias("n1"))
     i2 = item.select(F.col("l_partkey").alias("p2"), F.col("n_item").alias("n2"))
@@ -6023,24 +5987,23 @@ def corr_matrix_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _copurchase_edges(li: DataFrame) -> DataFrame:
-    """Distinct co-purchase part pairs (src < dst) via map-side pair
-    generation: baskets aggregate once per order (sorted part array), pairs
-    explode from each array (posexplode + slice) — ONE orderkey shuffle
-    where the textbook self-join shuffles lineitem twice and explodes
-    skewed orders (the market_basket_pairs plan; 2.1s -> 1.0s at sf0.1 for
-    the 1.2M-edge build). The oracles keep the self-join formulation — it
-    is the semantics, this is the scalable rewrite."""
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .distinct()
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
+def _copurchase_edges_counted(li: DataFrame) -> DataFrame:
+    """Co-purchase part pairs ``(src, dst, n_co)`` with src < dst and the
+    number of orders they share: ``group_pairs`` over the order baskets,
+    ONE orderkey shuffle where the textbook self-join shuffles lineitem
+    twice and explodes skewed orders (2.1s -> 1.0s at sf0.1 for the
+    1.2M-edge build). The oracles keep the self-join formulation — it is
+    the semantics, this is the scalable rewrite."""
+    return (
+        group_pairs(li, "l_orderkey", "l_partkey")
+        .groupBy(F.col("a").alias("src"), F.col("b").alias("dst"))
+        .agg(F.count("*").alias("n_co"))
     )
-    left = baskets.select("parts", F.posexplode("parts").alias("i", "src"))
-    return left.select(
-        "src", F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("dst")
-    ).distinct()
+
+
+def _copurchase_edges(li: DataFrame) -> DataFrame:
+    """Distinct co-purchase part pairs ``(src, dst)``, src < dst."""
+    return _copurchase_edges_counted(li).select("src", "dst")
 
 
 # --------------------------------------------------------------------------
@@ -6416,30 +6379,20 @@ def neardup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 def item_cosim_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-item collaborative similarity: the 20 part pairs with the
     highest co-order Jaccard (co-baskets / union of baskets). The
-    Jaccard-normalized sibling of basket_rules_lift: pair generation is the
-    same bounded within-order fan-out (C(items-per-order, 2) — never a
-    part×part cross join); the per-part order counts broadcast back onto
-    the pair table. Total order: jaccard desc, part ids."""
-    li = _t(spark, sf_dir, "lineitem")
+    Jaccard-normalized sibling of basket_rules_lift: pair counts come from
+    ``_copurchase_edges_counted`` (never a part×part cross join); the
+    per-part order counts broadcast back onto the pair table. Total order:
+    jaccard desc, part ids."""
     bsk = (
-        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
+        _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         .distinct()
         # one distinct computation for both downstream reads (basket pair
         # fan-out + per-part counts)
         .localCheckpoint(eager=True)
     )
-    n = bsk.groupBy("pk").agg(F.count("*").alias("n_orders"))
-    baskets = bsk.groupBy("ok").agg(F.sort_array(F.collect_set("pk")).alias("parts"))
-    # map-side pair generation (the market_basket_pairs plan) — one
-    # orderkey shuffle instead of a basket self-join
-    left = baskets.select("parts", F.posexplode("parts").alias("i", "part_a"))
-    co = (
-        left.select(
-            "part_a",
-            F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("part_b"),
-        )
-        .groupBy("part_a", "part_b")
-        .agg(F.count("*").alias("n_co"))
+    n = bsk.groupBy(F.col("l_partkey").alias("pk")).agg(F.count("*").alias("n_orders"))
+    co = _copurchase_edges_counted(bsk).select(
+        F.col("src").alias("part_a"), F.col("dst").alias("part_b"), "n_co"
     )
     sim = (
         co.join(n.select(F.col("pk").alias("part_a"), F.col("n_orders").alias("n_a")), "part_a")
@@ -8081,10 +8034,6 @@ def kcore_peel_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint truncates lineage between rounds. Node/edge counts per
     round are the oracle-checked fixpoint trace."""
     li = _t(spark, sf_dir, "lineitem")
-    # round-10: basket fan-out instead of the textbook lineitem self-join —
-    # identical (src<dst, shared-order-count) pairs from ONE orderkey
-    # shuffle + map-side pair explosion (the market_basket_pairs /
-    # _copurchase_edges plan; the oracle keeps the self-join formulation)
     edges = (
         _copurchase_edges_counted(li)
         .filter(F.col("n_co") >= 2)
@@ -8273,26 +8222,6 @@ def _edges2(spark: SparkSession, sf_dir: str) -> DataFrame:
         _copurchase_edges_counted(li)
         .filter(F.col("n_co") >= 2)
         .select("src", "dst")
-    )
-
-
-def _copurchase_edges_counted(li: DataFrame) -> DataFrame:
-    """Co-purchase pairs with their shared-order counts (the
-    _copurchase_edges basket fan-out, keeping n_co for thresholding)."""
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .distinct()
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-    )
-    left = baskets.select("parts", F.posexplode("parts").alias("i", "src"))
-    return (
-        left.select(
-            "src",
-            F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("dst"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("n_co"))
     )
 
 
@@ -10812,12 +10741,12 @@ def confusion_matrix_at_threshold(spark: SparkSession, sf_dir: str) -> DataFrame
 def adamic_adar_linkpred_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link prediction on the part co-purchase graph: top-20 NON-adjacent
     part pairs by Adamic-Adar score (sum of 1/ln(deg) over common
-    neighbors, hub-capped at deg 64). The Spark plan generates wedges
-    MAP-SIDE from per-center sorted neighbor arrays after pruning hubs
-    BEFORE the quadratic fan-out (operators/linkpred.py — the list size is
-    the degree, so no degree join); the oracle keeps the textbook
-    adjacency self-join. Per-wedge weights micro-round to BIGINT so the
-    cross-engine sums are addition-order-free."""
+    neighbors, hub-capped at deg 64). The Spark plan's wedges are
+    ``group_pairs`` over each center's neighbors, hubs dropped by its
+    ``max_group`` (operators/linkpred.py — the group size is the degree, so
+    no degree join); the oracle keeps the textbook adjacency self-join.
+    Per-wedge weights micro-round to BIGINT so the cross-engine sums are
+    addition-order-free."""
     from unified_firmographic_data_pipeline_spark.operators.linkpred import adamic_adar_topk
 
     li = _t(spark, sf_dir, "lineitem")
@@ -11967,20 +11896,15 @@ def bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def local_bridges_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local bridges of the co-purchase graph — edges whose endpoints
     share NO other neighbor (span > 2, Granovetter's weak-tie structure;
-    every local bridge is an edge on no triangle). Wedge pairs generate
-    map-side from per-center sorted neighbor lists (the triangle-count
-    fan-out); bridges are one anti-join of the edge list against them.
-    Reported as count + share of edges."""
+    every local bridge is an edge on no triangle). Wedge pairs are
+    ``group_pairs`` over each center's neighbors; bridges are one anti-join
+    of the edge list against them. Reported as count + share of edges."""
     edges = _edges2(spark, sf_dir)
     und = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     sym = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
-    centers = sym.groupBy("nbr").agg(F.sort_array(F.collect_set("node")).alias("ns"))
-    left = centers.select("ns", F.posexplode("ns").alias("i", "a"))
-    wedge = left.select(
-        "a", F.explode(F.expr("slice(ns, i + 2, size(ns))")).alias("b")
-    ).distinct()
+    wedge = group_pairs(sym, "nbr", "node").select("a", "b").distinct()
     br = und.join(wedge, ["a", "b"], "left_anti")
     tot = und.agg(F.count("*").cast("long").alias("n_edges"))
     return (
@@ -12856,32 +12780,11 @@ def dedup_detector_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("w"),
     ).distinct()
     sz = u.groupBy("doc_id").agg(F.count("*").cast("long").alias("n"))
-    # round-11 (VERDICT item 2): the shingle inverted index generates its
-    # candidate pairs MAP-SIDE from each shingle's sorted doc-id group
-    # (the measured market_basket/_copurchase fan-out shape) instead of
-    # the ua⋈ub self-join. Two structural wins at once: shingles held by
-    # ONE doc — the overwhelming majority of trigram shingles — are
-    # dropped by the size(ds) >= 2 gate BEFORE any pair work (guide §3
-    # pre-filter), and the join's second shuffle of the full shingle
-    # stream disappears (the group-by reuses the same single exchange).
-    # Sorted groups emit each unordered pair exactly once (x < y), so the
-    # pair counts are bit-identical to the join + filter formulation.
-    pair_pairs = (
-        u.groupBy("w")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds) - i - 1),"
-                    " y -> struct(x AS x, y AS y))))"
-                )
-            ).alias("pr")
-        )
-    )
-    inter = pair_pairs.groupBy(
-        F.col("pr.x").alias("x"), F.col("pr.y").alias("y")
+    # the shingle inverted index: group_pairs on the shingle, counted per
+    # pair, is the ua⋈ub self-join + count without its second shuffle of
+    # the shingle stream; shingles held by one doc emit nothing
+    inter = group_pairs(u, "w", "doc_id").groupBy(
+        F.col("a").alias("x"), F.col("b").alias("y")
     ).agg(F.count("*").cast("long").alias("i"))
     det = (
         inter.join(sz.withColumnRenamed("doc_id", "x").withColumnRenamed("n", "na"), "x")
@@ -12896,25 +12799,11 @@ def dedup_detector_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     pfx = toks.select(
         "doc_id", F.md5(F.array_join(F.slice("t", 1, 16), " ")).alias("p")
     )
-    # same fan-out for the prefix-duplicate truth set (replaces pa⋈pb):
-    # each prefix group's sorted ids emit every unordered pair once. NULL
-    # text has a NULL prefix, which the oracle's a.p = b.p never matches,
-    # so NULL prefixes form no group
-    truth = (
-        pfx.where(F.col("p").isNotNull())
-        .groupBy("p")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds) - i - 1),"
-                    " y -> struct(x AS x, y AS y))))"
-                )
-            ).alias("pr")
-        )
-        .select(F.col("pr.x").alias("x"), F.col("pr.y").alias("y"))
+    # the prefix-duplicate truth set (replaces pa⋈pb); NULL text has a
+    # NULL prefix, which group_pairs, like the oracle's a.p = b.p, never
+    # groups
+    truth = group_pairs(pfx, "p", "doc_id").select(
+        F.col("a").alias("x"), F.col("b").alias("y")
     )
     # round-10: one pass over both pair sets — a full-outer join on the
     # pair key yields n_detected / n_truth / tp as three counts of ONE
@@ -18700,10 +18589,6 @@ _MODIFIED_FIRST: dict[str, int] = {
     "variant_lateral_flatten": 4,
     "json_extract_props": 4,
     "variant_json_extract": 4,
-    # r5 triangle closure auto-switch (operators/triangles.py), green r5:
-    "triangle_stats_copurchase": 5,
-    "truss_edge_support_hist": 5,
-    "local_clustering_topk": 5,
     # r6: oracle rewritten from rows-only to a strict exact-twin equality
     # check (verdict item #7) — first green must postdate the rewrite.
     "approx_distinct_hll": 6,
@@ -18721,9 +18606,28 @@ _MODIFIED_FIRST: dict[str, int] = {
     # tagged min(rank) pre-aggregate) — same values on contract-clean
     # inputs, but the PLAN changed, so the green must postdate it.
     "retriever_rrf_fusion_topk": 10,
-    # r12: dedup_detector_pr's truth set no longer groups NULL prefixes
-    # together (≥2 NULL-text documents inflated n_truth by C(k,2)).
-    "dedup_detector_pr": 12,
+    # r13: every shared-key pair fan-out is operators/pairs.py:group_pairs
+    # (one dialect; NULL keys dropped). The triangle entries were r5's
+    # closure auto-switch, green r5; dedup_detector_pr was r12's NULL-prefix
+    # fix.
+    "triangle_stats_copurchase": 13,
+    "truss_edge_support_hist": 13,
+    "local_clustering_topk": 13,
+    "dedup_detector_pr": 13,
+    "neardup_cluster_components": 13,
+    "neardup_cluster_keep_best": 13,
+    "leakage_safe_split_counts": 13,
+    "market_basket_pairs": 13,
+    "basket_rules_lift": 13,
+    "item_cosim_jaccard_topk": 13,
+    "degree_distribution_copurchase": 13,
+    "assortativity_copurchase": 13,
+    "kcore_peel_rounds": 13,
+    "label_prop_seeded_scores": 13,
+    "adamic_adar_linkpred_topk": 13,
+    "modularity_onehop_communities": 13,
+    "local_bridges_count": 13,
+    "random_walk_corpus": 13,
 }
 
 

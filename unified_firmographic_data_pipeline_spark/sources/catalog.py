@@ -155,14 +155,20 @@ class Catalog:
         return os.path.join(self.root, schema.lower(), table.lower())
 
     def exists(self, schema: str, table: str) -> bool:
-        p = self.path(schema, table)
-        return os.path.exists(p) and bool(
-            [
-                f
-                for f in os.listdir(p)
-                if f.endswith((".parquet", ".orc", ".json", ".csv", ".xml")) or f == "_SUCCESS"
-            ]
-        )
+        """A data file, a ``_SUCCESS`` marker or a ``k=v`` partition
+        directory at the table's top level (a table written only by
+        ``overwrite_partitions`` has nothing else there). One listing, no
+        walk: every ``read_or_none`` calls this."""
+        try:
+            with os.scandir(self.path(schema, table)) as entries:
+                return any(
+                    e.name == "_SUCCESS"
+                    or e.name.endswith((".parquet", ".orc", ".json", ".csv", ".xml"))
+                    or ("=" in e.name and not e.name.startswith((".", "_")) and e.is_dir())
+                    for e in entries
+                )
+        except FileNotFoundError:
+            return False
 
     def _schema_sidecar(self, schema: str, table: str) -> str:
         return self.path(schema, table) + "._schema.json"
