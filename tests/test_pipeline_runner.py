@@ -1,11 +1,12 @@
 """The model runner around the firmographic pipeline: the catalog's schema
-record, the checks that ride each model's write, the run manifest, and the
-number of Spark jobs a night costs per model."""
+and statistics record, the checks that ride each model's write, the run
+manifest, and the number of Spark jobs a night costs per model."""
 
 from __future__ import annotations
 
 import os
 import shutil
+from datetime import date, datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,28 +21,32 @@ from tests.fixtures import (
     raw_df,
     wiki_payload,
 )
+from unified_firmographic_data_pipeline_spark.operators.incremental import high_watermark
+from unified_firmographic_data_pipeline_spark.operators.scd2 import VALID_TO, scd2_apply, scd2_init
 from unified_firmographic_data_pipeline_spark.plans.firmographics import GRAPH
 from unified_firmographic_data_pipeline_spark.plans.graph import ModelGraph, model
 from unified_firmographic_data_pipeline_spark.quality.expect import QualityError, expect
-from unified_firmographic_data_pipeline_spark.sources.catalog import Catalog
+from unified_firmographic_data_pipeline_spark.sources.catalog import Catalog, column_max
 
 #: Spark jobs each model may run on the fixture pipeline's second night
-#: (a full re-landing of both sources), 56 in all; the same night cost 101
+#: (a full re-landing of both sources), 41 in all; the same night cost 101
 #: when every read inferred its schema and every check ran its own action
-#: over the re-read table. What remains: the writes (with their shuffle
-#: and broadcast stages), one inference read per RAW table, the watermark
-#: and SCD2 batch-max scalars, one action for all unique checks of a model
-#: (a job per key plus one) and three jobs per fk.
+#: over the re-read table, and 56 when watermarks and SCD2 batch maxima
+#: scanned the table the catalog had just written and each fk check ran
+#: its own three-job action. What remains: the writes (with their shuffle
+#: and broadcast stages), one inference read per RAW table, and one action
+#: for all unique and fk checks of a model (a job per GROUP BY key and per
+#: broadcast dimension, plus one).
 JOB_BUDGET = {
-    "stg_wiki_sp500": 10,
-    "stg_fortune500": 7,
-    "cr_company_complete": 11,
-    "company_location_snapshot": 6,
-    "fortune_metrics_snapshot": 6,
+    "stg_wiki_sp500": 8,
+    "stg_fortune500": 5,
+    "cr_company_complete": 9,
+    "company_location_snapshot": 4,
+    "fortune_metrics_snapshot": 4,
     "dim_company": 3,
     "dim_location": 1,
     "dim_fortune_metrics": 1,
-    "fact_company_performance": 11,
+    "fact_company_performance": 6,
 }
 
 
@@ -236,3 +241,123 @@ def test_ticker_rename_raises_fk(spark, tmp_path):
     _land(spark, cat, T1, 1, wiki_rows=renamed)
     with pytest.raises(QualityError, match=r"fk\(company_key\)"):
         GRAPH.run(spark, cat)
+
+
+def _observed_overwrite(cat, df, schema, table, partition_by=None):
+    """A full write as the runner makes it: the Expectation's Observation
+    rides the write and its statistics join the record."""
+    e = expect(df)
+    cat.overwrite(e.observe(df), schema, table, partition_by, observation=e.observation)
+
+
+def _scan(df, col):
+    return tuple(df.agg(F.min(col), F.max(col)).first())
+
+
+@pytest.fixture
+def los_angeles(spark):
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    yield
+    spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+RANGES_DDL = "k string, ts timestamp, ntz timestamp_ntz, d date, none_ts timestamp"
+RANGES_ROWS = [
+    # 01:30 on 2024-11-03 happens twice in Los Angeles; microseconds throughout
+    ("a", datetime(2024, 11, 3, 1, 30, 0, 123456), datetime(2024, 11, 3, 1, 30, 0, 999999), date(1969, 12, 31), None),
+    ("b", datetime(1970, 1, 1, 0, 0, 0, 1), datetime(1900, 1, 1, 0, 0, 0, 7), date(2024, 2, 29), None),
+    ("c", None, None, None, None),
+]
+
+
+@pytest.mark.parametrize("rows", [RANGES_ROWS, []], ids=["rows", "empty"])
+def test_recorded_ranges_equal_the_scan(spark, tmp_path, los_angeles, rows):
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    _observed_overwrite(cat, spark.createDataFrame(rows, RANGES_DDL), "core", "t")
+    stats = cat.recorded_stats("core", "t")
+    scanned = spark.read.parquet(cat.path("core", "t"))
+    assert stats["rows"] == len(rows)
+    assert set(stats["ranges"]) == {"ts", "ntz", "d", "none_ts"}
+    for col, (lo, hi) in stats["ranges"].items():
+        assert (lo, hi) == _scan(scanned, col), col
+        j0 = _jobs(spark)
+        assert column_max(cat.read("core", "t"), col) == hi, col
+        assert _jobs(spark) == j0, f"max({col}) ran a Spark job"
+    assert stats["ranges"]["none_ts"] == (None, None)
+    if not rows:
+        assert all(r == (None, None) for r in stats["ranges"].values())
+
+
+def test_table_replaced_outside_the_catalog_scans_its_watermark(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    _observed_overwrite(cat, spark.createDataFrame([(1, datetime(2025, 1, 1))], "id long, ts timestamp"), "core", "t")
+    path = cat.path("core", "t")
+    assert high_watermark(cat.read("core", "t"), "ts") == datetime(2025, 1, 1)
+    later = datetime(2025, 6, 1, 12, 0, 0, 5)
+    spark.createDataFrame([(2, later)], "id long, ts timestamp").write.parquet(str(tmp_path / "landing"))
+    for f in os.listdir(path):
+        if f.startswith("part-"):
+            os.remove(os.path.join(path, f))
+    for f in os.listdir(tmp_path / "landing"):
+        if f.endswith(".parquet"):
+            shutil.copyfile(tmp_path / "landing" / f, os.path.join(path, "landed-" + f))
+    assert cat.recorded_stats("core", "t") is None
+    j0 = _jobs(spark)
+    assert high_watermark(cat.read("core", "t"), "ts") == later
+    assert _jobs(spark) > j0  # scanned
+
+
+def test_scd2_batch_max_of_a_filtered_source_is_scanned(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    t1, t2 = datetime(2025, 1, 1), datetime(2025, 2, 1)
+    _observed_overwrite(
+        cat, spark.createDataFrame([("a", "x", t1), ("b", "y", t2)], "k string, v string, ts timestamp"), "core", "src"
+    )
+    src = cat.read("core", "src")
+    snapshot = scd2_init(spark.createDataFrame([("a", "x", t1), ("c", "z", t1)], "k string, v string, ts timestamp"), "k", "ts")
+    # a projection of the table: the record answers, and c closes at its max
+    assert column_max(src.select("k", F.col("ts").alias("at")), "at") == t2
+    got = {r.k: r[VALID_TO] for r in scd2_apply(snapshot, src.select("k", "v", "ts"), "k", "ts").collect()}
+    assert got["c"] == t2
+    # a filtered source closes c at the filter's max, not the table's
+    got = {r.k: r[VALID_TO] for r in scd2_apply(snapshot, src.filter(F.col("k") == "a"), "k", "ts").collect()}
+    assert got == {"a": None, "c": t1}
+    # computed columns and frames built in memory are scanned too
+    day_before = src.select((F.col("ts") - F.expr("INTERVAL 1 DAY")).alias("ts"))
+    assert column_max(day_before, "ts") == datetime(2025, 1, 31)
+    assert column_max(spark.createDataFrame([(t1,)], "ts timestamp"), "ts") == t1
+
+
+def test_append_and_partition_overwrite_serve_no_stale_stats(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    first = spark.createDataFrame([(1, "d1", datetime(2025, 1, 1))], "id long, day string, ts timestamp")
+    later = spark.createDataFrame([(2, "d2", datetime(2025, 5, 1))], "id long, day string, ts timestamp")
+    _observed_overwrite(cat, first, "core", "log")
+    cat.append(later, "core", "log")
+    assert cat.recorded_schema("core", "log") is not None
+    assert cat.recorded_stats("core", "log") is None
+    assert high_watermark(cat.read("core", "log"), "ts") == datetime(2025, 5, 1)
+
+    _observed_overwrite(cat, first, "core", "part", partition_by=["day"])
+    assert cat.recorded_stats("core", "part")["rows"] == 1
+    cat.overwrite_partitions(later, "core", "part", ["day"])
+    assert cat.recorded_stats("core", "part") is None
+    assert high_watermark(cat.read("core", "part"), "ts") == datetime(2025, 5, 1)
+
+
+def test_fk_counts_every_orphan(spark):
+    fact = spark.createDataFrame([(1,), (2,), (3,), (4,), (None,)], "k int")
+    dim = spark.createDataFrame([(1,)], "k int")
+    with pytest.raises(QualityError, match=r"^fk\(k\): 3 violation\(s\)$"):
+        expect(fact).unique(["k"]).fk("k", dim).run()
+
+
+def test_text_formats_record_no_ranges(spark, tmp_path):
+    # JSON writes timestamps to the millisecond: a recorded microsecond
+    # maximum would not be what a scan returns
+    cat = Catalog(spark, str(tmp_path / "wh"), fmt="json")
+    _observed_overwrite(cat, spark.createDataFrame([(datetime(2025, 1, 1, 0, 0, 0, 123456),)], "ts timestamp"), "core", "t")
+    assert cat.recorded_schema("core", "t") is not None
+    assert cat.recorded_stats("core", "t") is None
+    assert high_watermark(cat.read("core", "t"), "ts") == datetime(2025, 1, 1, 0, 0, 0, 123000)

@@ -1,4 +1,4 @@
-"""Landing reader (A4), watermark store, run metadata (A7), and the
+"""Landing reader (A4), run metadata (A7), and the
 temporal operators (as-of join, sessionize)."""
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
-from unified_firmographic_data_pipeline_spark.operators.incremental import WatermarkStore
 from unified_firmographic_data_pipeline_spark.operators.temporal import asof_join, sessionize
 from unified_firmographic_data_pipeline_spark.sources.landing import read_json_landing
 
@@ -27,34 +26,6 @@ def test_read_json_landing_glob_and_stamp(spark, tmp_path):
     assert r["ingested_at"] is not None
     assert json.loads(r["payload"]) == {"items": [1, 2]}
     assert set(df.columns) == {"id", "source", "ingested_at", "payload"}
-
-
-def test_watermark_store_roundtrip(tmp_path):
-    store = WatermarkStore(str(tmp_path / "wm.json"))
-    assert store.get("t1") is None
-    store.set("t1", "2025-01-01 00:00:00")
-    store.set("t2", datetime(2025, 2, 1))
-    assert store.get("t1") == "2025-01-01 00:00:00"
-    assert store.get("t2") == "2025-02-01 00:00:00"
-    store.set("t1", "2025-03-01 00:00:00")  # overwrite
-    assert store.get("t1") == "2025-03-01 00:00:00"
-
-
-def test_watermark_store_scheme_qualified_path(spark, tmp_path):
-    """Round-9 verdict #1: the ledger must honor its shared-storage claim.
-    A ``file:`` scheme-qualified path exercises the Hadoop FileSystem route
-    end-to-end (the old ``os.path``-based IO raised FileNotFoundError on any
-    scheme-qualified path — ``open('file:/...')`` has no such directory)."""
-    store = WatermarkStore("file:" + str(tmp_path / "wm.json"), spark)
-    assert store.get("t") is None
-    store.set("t", "2025-01-01 00:00:00")
-    assert store.get("t") == "2025-01-01 00:00:00"
-    store.set("t", "2025-06-01 00:00:00")  # delete + rename overwrite path
-    assert store.get("t") == "2025-06-01 00:00:00"
-    # file: resolves to the local FS — the bytes really landed there, and
-    # no orphan tmp remains after the rename
-    assert (tmp_path / "wm.json").exists()
-    assert not (tmp_path / "wm.json.tmp").exists()
 
 
 def test_run_metadata_recorded(spark, tmp_path):

@@ -7,31 +7,35 @@ compiles the materialization to a Snowflake ``MERGE`` on the configured
 ``unique_key`` (``dbt_project.yml:35-56``).
 
 Spark-first design: the watermark is the single permitted driver-side scalar
-(SURVEY.md §7.3d) — an ``agg(max)`` over the prior output. Parquet aggregate
-pushdown is off by default, so it is not answered from footer statistics:
-it scans the column and costs two Spark jobs (partial max, final max). The
-upsert is the
-join-based rewrite ``existing.join(delta, key, 'left_anti') ∪ delta`` — one
-shuffle on the key; with Delta/Iceberg the same contract maps to MERGE INTO.
-The delta filter itself is a pushed-down Parquet predicate on the source.
+(SURVEY.md §7.3d) — ``max(ts)`` over the prior output. When that output is a
+table the catalog wrote and nothing has changed it since, the value comes
+from the statistics recorded with the write (``sources/catalog.py:
+column_max``) and costs no Spark job; otherwise it is an ``agg(max)`` scan of
+the column, two jobs (partial max, final max), as the V1 parquet source
+answers no aggregate from footers. The upsert is the join-based rewrite
+``existing.join(delta, key, 'left_anti') ∪ delta`` — one shuffle on the key;
+with Delta/Iceberg the same contract maps to MERGE INTO. The delta filter
+itself is a pushed-down Parquet predicate on the source.
 """
 
 from __future__ import annotations
 
 import functools
-import json
-import os
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from unified_firmographic_data_pipeline_spark.sources.catalog import atomic_swap_write, column_max, fs_exists
+
 
 def high_watermark(prior: DataFrame | None, ts_col: str) -> Any:
-    """``SELECT max(ts) FROM {{ this }}`` — None on first run."""
+    """``SELECT max(ts) FROM {{ this }}`` — None on first run. Answered
+    from the catalog's record when ``prior`` is a table as ``Catalog.read``
+    returns it, scanned otherwise (``column_max``)."""
     if prior is None:
         return None
-    return prior.agg(F.max(ts_col)).first()[0]
+    return column_max(prior, ts_col)
 
 
 def incremental_filter(df: DataFrame, ts_col: str, watermark: Any) -> DataFrame:
@@ -100,11 +104,6 @@ def _merge_with_swap(spark, delta_df: DataFrame, keys: list[str], table_path: st
     """Fallback path: anti-join + union + atomic directory swap. Correct on
     plain parquet, but rewrites the whole table per run — the price of no
     transactional format."""
-    from unified_firmographic_data_pipeline_spark.sources.catalog import (
-        atomic_swap_write,
-        fs_exists,
-    )
-
     existing = spark.read.parquet(table_path) if fs_exists(spark, table_path) else None
     atomic_swap_write(upsert(existing, delta_df, keys), table_path)
     return "swap-rewrite"
@@ -131,86 +130,6 @@ def materialize_merge(spark, delta_df: DataFrame, keys: list[str], table_path: s
     if delta_merge_available():
         return _merge_with_delta(spark, delta_df, keys, table_path)
     return _merge_with_swap(spark, delta_df, keys, table_path)
-
-
-class WatermarkStore:
-    """Tiny per-table watermark ledger (one small JSON file), the engine
-    state that Catalyst cannot know (SURVEY.md §4). One record per table
-    name; values are ISO strings — a single driver-written file, never row
-    data.
-
-    Storage-agnostic (round-9 verdict #1 — the docstring used to claim
-    S3/DBFS residency while ``_load``/``set`` went through ``os.path`` and
-    would FileNotFoundError on any scheme-qualified path): IO now routes
-    through the Hadoop FileSystem API resolved from the path's scheme
-    (``file:``, ``hdfs:``, ``s3a:``, ...), the same resolution seam as
-    :func:`sources.catalog.fs_exists`, so a shared-storage path really
-    holds state. Durability contract: SINGLE driver writer per ledger;
-    ``set`` is write-tmp → delete-dst → rename-tmp (atomic on POSIX/HDFS
-    rename semantics, last-writer-wins on object stores — fine for a
-    once-per-run scalar, not a concurrent commit log). Falls back to plain
-    POSIX io only when no JVM gateway is reachable (e.g. Spark Connect, or
-    no session started), where only local paths are possible anyway."""
-
-    def __init__(self, path: str, spark: Any | None = None):
-        self.path = path
-        self._spark = spark
-
-    def _fs(self):
-        """(HadoopFileSystem, jvm) for this path's scheme, or (None, None)
-        when no JVM is reachable — the POSIX-fallback signal."""
-        from pyspark.sql import SparkSession
-
-        spark = self._spark or SparkSession.getActiveSession()
-        try:
-            jvm = spark._jvm
-            jconf = spark._jsc.hadoopConfiguration()
-            jpath = jvm.org.apache.hadoop.fs.Path(self.path)
-            return jpath.getFileSystem(jconf), jvm
-        except AttributeError:  # spark is None / Connect: no py4j gateway
-            return None, None
-
-    def _load(self) -> dict[str, str]:
-        fs, jvm = self._fs()
-        if fs is None:
-            if os.path.exists(self.path):
-                with open(self.path) as f:
-                    return json.load(f)
-            return {}
-        jpath = jvm.org.apache.hadoop.fs.Path(self.path)
-        if not fs.exists(jpath):
-            return {}
-        stream = fs.open(jpath)
-        try:
-            text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        return json.loads(text)
-
-    def get(self, table: str) -> str | None:
-        return self._load().get(table)
-
-    def set(self, table: str, value: Any) -> None:
-        state = self._load()
-        state[table] = value if isinstance(value, str) else str(value)
-        payload = json.dumps(state, indent=2, sort_keys=True)
-        fs, jvm = self._fs()
-        if fs is None:
-            tmp = self.path + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(payload)
-            os.replace(tmp, self.path)
-            return
-        jtmp = jvm.org.apache.hadoop.fs.Path(self.path + ".tmp")
-        jdst = jvm.org.apache.hadoop.fs.Path(self.path)
-        out = fs.create(jtmp, True)
-        try:
-            out.write(payload.encode("utf-8"))
-        finally:
-            out.close()
-        if fs.exists(jdst):
-            fs.delete(jdst, False)
-        fs.rename(jtmp, jdst)
 
 
 # -- incremental aggregate maintenance ------------------------------------

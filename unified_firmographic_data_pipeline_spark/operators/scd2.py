@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from unified_firmographic_data_pipeline_spark.functions.keys import surrogate_key
+from unified_firmographic_data_pipeline_spark.sources.catalog import column_max
 
 #: SCD2 metadata columns, named after their public dbt counterparts so the
 #: star models read identically (reference README.md:418-422).
@@ -83,7 +84,9 @@ def scd2_apply(
     # keys get it closed at the new updated_at; vanished keys get closed at
     # the new batch's max timestamp (dbt uses the run's transaction time; the
     # engine uses the batch high-watermark so reruns stay deterministic).
-    batch_hwm = source.agg(F.max(updated_at)).first()[0]
+    # A source that only projects a catalog table (the snapshot models'
+    # case) reads it from the table's record; any other source is scanned.
+    batch_hwm = column_max(source, updated_at)
     kept_open = joined.filter(~is_new_key).select(
         *[open_rows[c] for c in data_cols],
         open_rows[SCD_ID],

@@ -6,11 +6,12 @@ strategy. ``run()`` topologically sorts and executes; each result goes to a
 materializer:
 
 - ``table``       -> atomic overwrite (dbt ``+materialized: table``).
-- ``incremental`` -> watermark delta is the *model's* job (it can call
-                     ``ctx.watermark``/``ctx.prior``); the runner upserts the
-                     result on the configured unique key
-                     (dbt ``+materialized: incremental`` + ``+unique_key``,
-                     ``dbt_project.yml:35-56``).
+- ``incremental`` -> watermark delta is the *model's* job: it calls
+                     ``high_watermark(ctx.prior(), ts)`` and
+                     ``incremental_filter`` (``operators/incremental.py``);
+                     the runner upserts the result on the configured unique
+                     key (dbt ``+materialized: incremental`` +
+                     ``+unique_key``, ``dbt_project.yml:35-56``).
 - ``snapshot``    -> SCD2 fold via ``scd2_apply`` (dbt snapshot, §2.J).
 
 The IR of the whole cascade is the Catalyst logical plan — nothing here
@@ -114,9 +115,11 @@ class ModelGraph:
 
         A model's ``tests(ctx, df)`` declares its checks on an Expectation
         over ``df`` and returns it unrun. The runner attaches the row checks
-        and a row count to the frame it writes (``Expectation.observe``),
-        then runs the Expectation over the table as written: the row checks
-        come out of the write, the unique and fk checks run beside it.
+        and the table statistics to the frame it writes
+        (``Expectation.observe``), then runs the Expectation over the table
+        as written: the row checks come out of the write, the unique and fk
+        checks run beside it, and the catalog records the statistics (row
+        count, timestamp and date ranges) that later watermarks read.
 
         ``record_metadata=True`` appends one row per model run to the
         ``_meta.run_metadata`` table (invocation_id, model, status, wall
@@ -144,7 +147,8 @@ class ModelGraph:
                         # nothing written: downstream ref() inlines the logical plan
                         ctx._ephemeral_cache[name] = df
                     else:
-                        catalog.overwrite(checks.observe(_target(ctx, spec, df)), spec.schema, name)
+                        target = checks.observe(_target(ctx, spec, df))
+                        catalog.overwrite(target, spec.schema, name, observation=checks.observation)
                         rows = checks.observed_rows
                         if checks.checks:
                             checks.df = catalog.read(spec.schema, name)

@@ -12,9 +12,10 @@ What the checks cost, in Spark actions:
   violation-count aggregates. ``observe(df)`` attaches all of them to the
   frame about to be written, so they are counted by the write itself and
   cost no job; without it, ``run()`` counts them in one aggregate pass.
-- all ``unique`` checks of one Expectation run as ONE action over the
-  frame: a GROUP BY per key, unioned; one job per key plus one.
-- each ``fk`` check is its own anti-join action.
+- all ``unique`` and ``fk`` checks of one Expectation run as ONE action
+  over the frame: a GROUP BY per unique key and a left-anti join per fk,
+  unioned and counted per check. Each GROUP BY adds one map-stage job and
+  each broadcast dimension one broadcast job; the action adds one.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from unified_firmographic_data_pipeline_spark.sources.catalog import table_stats
 
 
 class QualityError(AssertionError):
@@ -46,8 +49,8 @@ class _Check:
 class Expectation:
     df: DataFrame
     checks: list[_Check] = field(default_factory=list)
-    # set by observe(): the row checks and the row count of one write
-    _observation: Observation | None = field(default=None, init=False, repr=False)
+    # set by observe(): the row checks and the table statistics of one write
+    observation: Observation | None = field(default=None, init=False, repr=False)
 
     # -- generic tests ------------------------------------------------------
     def not_null(self, cols: Sequence[str]) -> "Expectation":
@@ -108,54 +111,55 @@ class Expectation:
             .join(dim.select(F.col(dim_key).alias(key)), key, "left_anti")
         )
 
-    def _unique_failures(self, checks: list[_Check]) -> dict[str, int]:
-        """Duplicate-group counts of every unique key in one action: the
-        keys' duplicate groups are unioned and counted per check by an
-        Observation on a no-op write. Each key keeps the shuffle of its own
-        GROUP BY (the same bytes as a separate check) and adds one map-stage
-        job; the action adds one job, not one per check."""
-        dups = [self._duplicate_groups(c.unique).select(F.lit(i).alias("i")) for i, c in enumerate(checks)]
+    def _violating_rows(self, check: _Check) -> DataFrame:
+        """One row per violation of a unique or fk check."""
+        return self._duplicate_groups(check.unique) if check.unique is not None else self._orphans(check)
+
+    def _set_failures(self, checks: list[_Check]) -> dict[str, int]:
+        """Violation counts of every unique and fk check in one action: each
+        check's violating rows (duplicate groups, orphan keys) are unioned
+        and counted per check by an Observation on a no-op write. Each check
+        keeps the plan of a separate one (a GROUP BY shuffle, a join) and
+        the action adds one job, not one per check."""
+        bad = [self._violating_rows(c).select(F.lit(i).alias("i")) for i, c in enumerate(checks)]
         obs = Observation()
         (
-            functools.reduce(DataFrame.unionByName, dups)
-            .observe(obs, *[F.count(F.when(F.col("i") == i, 1)).alias(f"u{i}") for i in range(len(checks))])
+            functools.reduce(DataFrame.unionByName, bad)
+            .observe(obs, *[F.count(F.when(F.col("i") == i, 1)).alias(f"s{i}") for i in range(len(checks))])
             .write.format("noop").mode("overwrite").save()
         )
         got = obs.get
-        return {c.name: got[f"u{i}"] for i, c in enumerate(checks)}
+        return {c.name: got[f"s{i}"] for i, c in enumerate(checks)}
 
     # -- execution ----------------------------------------------------------
     def observe(self, df: DataFrame) -> DataFrame:
-        """Attach the row checks, plus a row count, to ``df`` — the frame
-        about to be written — as one Observation. The write then counts
-        them, and ``run()`` reads them from it instead of scanning; the
-        unique and fk checks still run over ``self.df``. Declare every check
-        before calling this."""
-        self._observation = Observation()
-        return df.observe(self._observation, F.count(F.lit(1)).alias("rows"), *self._row_aggs())
+        """Attach the row checks, plus the table statistics the catalog
+        records (``table_stats``: the row count and the min and max of every
+        timestamp and date column), to ``df`` — the frame about to be
+        written — as one Observation. The write then counts them, and
+        ``run()`` reads them from it instead of scanning; the unique and fk
+        checks still run over ``self.df``. Declare every check before
+        calling this."""
+        self.observation = Observation()
+        return df.observe(self.observation, *table_stats(df.schema), *self._row_aggs())
 
     @property
     def observed_rows(self) -> int:
         """Rows counted by the observed write (blocks until it has run)."""
-        return self._observation.get["rows"]
+        return self.observation.get["rows"]
 
     def collect_failures(self) -> dict[str, int]:
         failures: dict[str, int] = {}
         rows = self._row_checks()
         if rows:
-            if self._observation is not None:
-                got = self._observation.get
+            if self.observation is not None:
+                got = self.observation.get
             else:
                 got = self.df.agg(*self._row_aggs()).first().asDict()
             failures.update({c.name: got[f"c{i}"] for i, c in enumerate(rows) if got[f"c{i}"]})
-        uniques = [c for c in self.checks if c.unique is not None]
-        if uniques:
-            failures.update({k: n for k, n in self._unique_failures(uniques).items() if n})
-        for c in self.checks:
-            if c.fk is not None:
-                n = self._orphans(c).limit(1).count()
-                if n:
-                    failures[c.name] = n
+        sets = [c for c in self.checks if c.agg is None]
+        if sets:
+            failures.update({k: n for k, n in self._set_failures(sets).items() if n})
         return failures
 
     def run(self) -> None:
@@ -187,9 +191,8 @@ class Expectation:
         for c in self.checks:
             if c.agg is not None:
                 continue
-            bad = self._duplicate_groups(c.unique) if c.unique is not None else self._orphans(c)
             frames.append(
-                bad.agg(F.count("*").cast("long").alias("n_violations")).select(
+                self._violating_rows(c).agg(F.count("*").cast("long").alias("n_violations")).select(
                     F.lit(c.name).alias("test"), "n_violations"
                 )
             )

@@ -19,9 +19,12 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import Column, DataFrame, DataFrameWriter, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, DateType, StructType, TimestampNTZType, TimestampType
 
 
 def fs_exists(spark: SparkSession, path: str) -> bool:
@@ -130,6 +133,119 @@ def _listing(path: str) -> str:
     return hashlib.sha256(json.dumps(sorted(entries)).encode()).hexdigest()
 
 
+def _sidecar(path: str) -> str:
+    return path + "._schema.json"
+
+
+def _load_record(path: str) -> dict | None:
+    """The record beside the table directory ``path``, or None when there
+    is none or the directory changed since it was made."""
+    try:
+        with open(_sidecar(path), encoding="utf-8") as fh:
+            rec = json.load(fh)
+    except FileNotFoundError:
+        return None
+    return rec if rec.get("listing") == _listing(path) else None
+
+
+#: Column types whose min and max a record keeps, as the integers Spark
+#: holds them as (epoch microseconds; epoch days for dates), so a value
+#: survives JSON exactly and decodes to what a scan would return.
+_RANGE_TYPES: dict[str, tuple[DataType, Callable[[Column], Column]]] = {
+    "timestamp": (TimestampType(), F.unix_micros),
+    "timestamp_ntz": (
+        TimestampNTZType(),
+        lambda c: F.timestamp_diff("MICROSECOND", F.lit("1970-01-01").cast("timestamp_ntz"), c),
+    ),
+    "date": (DateType(), F.unix_date),
+}
+
+
+def table_stats(st: StructType) -> list[Column]:
+    """Aggregates a frame of schema ``st`` carries to ``Catalog.overwrite``
+    in its ``observation``: the row count (``rows``) and the min and max of
+    every timestamp and date column, encoded as in ``_RANGE_TYPES``."""
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    for f in st.fields:
+        if f.dataType.typeName() in _RANGE_TYPES:
+            encode = _RANGE_TYPES[f.dataType.typeName()][1]
+            c = F.col("`" + f.name.replace("`", "``") + "`")
+            aggs += [encode(F.min(c)).alias(f"min {f.name}"), encode(F.max(c)).alias(f"max {f.name}")]
+    return aggs
+
+
+def _stats_record(st: StructType, got: dict, partition_by: list[str] | None) -> dict:
+    """The record's ``rows`` and ``ranges`` from the observed ``got``.
+    Partition columns are left out: their values live in directory names,
+    which Spark writes and parses in the session time zone."""
+    return {
+        "rows": got["rows"],
+        "ranges": {
+            f.name: {"type": f.dataType.typeName(), "min": got[f"min {f.name}"], "max": got[f"max {f.name}"]}
+            for f in st.fields
+            if f.dataType.typeName() in _RANGE_TYPES and f.name not in (partition_by or ())
+        },
+    }
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _kind(jobj) -> str:
+    return jobj.getClass().getSimpleName()
+
+
+def _recorded_range(df: DataFrame, col: str) -> dict | None:
+    """The recorded range of ``col`` when ``df``'s analyzed plan is nothing
+    but projections that pass ``col`` through from one catalog table whose
+    listing still matches its record; None otherwise."""
+    try:
+        node = df._jdf.queryExecution().analyzed()
+    except AttributeError:  # Spark Connect: no plan to walk
+        return None
+    out = _seq(node.output())
+    attrs = [a for a in out if a.name() == col] or [a for a in out if a.name().lower() == col.lower()]
+    if len(attrs) != 1:
+        return None
+    expr_id = attrs[0].exprId()
+    while _kind(node) == "Project":
+        e = next(e for e in _seq(node.projectList()) if e.exprId().equals(expr_id))
+        if _kind(e) == "Alias":
+            e = e.child()
+        if _kind(e) != "AttributeReference":
+            return None  # computed: not the table's own values
+        expr_id = e.exprId()
+        node = node.child()
+    if _kind(node) != "LogicalRelation" or _kind(node.relation()) != "HadoopFsRelation":
+        return None
+    roots = _seq(node.relation().location().rootPaths())
+    if len(roots) != 1 or roots[0].toUri().getScheme() not in (None, "file"):
+        return None
+    rec = _load_record(roots[0].toUri().getPath().rstrip("/"))
+    attr = next(a for a in _seq(node.output()) if a.exprId().equals(expr_id))
+    rng = (rec or {}).get("ranges", {}).get(attr.name())
+    if rng is None or rng["type"] != attr.dataType().typeName():
+        return None
+    return rng
+
+
+def _decode(rng: dict, end: str) -> Any:
+    v = rng[end]
+    return None if v is None else _RANGE_TYPES[rng["type"]][0].fromInternal(v)
+
+
+def column_max(df: DataFrame, col: str) -> Any:
+    """``max(col)`` over ``df``, as ``df.agg(max(col)).first()[0]`` returns
+    it. Read from the catalog's record of the table when ``df`` only
+    projects ``col`` through from one catalog table that has not changed
+    since it was written (no Spark job); scanned otherwise (two jobs: a
+    filter, join or union, a table changed outside the catalog, a frame
+    built in memory)."""
+    rng = _recorded_range(df, col)
+    return df.agg(F.max(col)).first()[0] if rng is None else _decode(rng, "max")
+
+
 class Catalog:
     """Path-addressed table catalog rooted at ``root``; schema/table
     naming mirrors the reference's RAW/STAGING/CORE/ANALYTICS layout
@@ -142,7 +258,16 @@ class Catalog:
     so Spark runs no schema-inference job (one per read on parquet) and the
     interchange formats keep their exact types. A table changed outside
     the catalog (a RAW file copied in, a compaction) no longer matches its
-    record and is read with inference."""
+    record and is read with inference.
+
+    A full parquet or ORC ``overwrite`` given the write's ``observation``
+    also records ``rows``, the row count, and ``ranges``: for every
+    timestamp, ``timestamp_ntz`` and date column that is not a partition
+    column, its ``type`` and its ``min`` and ``max`` as epoch microseconds
+    (epoch days for a date), NULL for an empty or all-NULL column. ``column_max`` answers from them, so a
+    watermark over a table the catalog wrote costs no Spark job. ``append``
+    and ``overwrite_partitions`` see only the rows they add, so their
+    record keeps the schema and no statistics."""
 
     def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
         if fmt not in CATALOG_FORMATS:
@@ -170,30 +295,31 @@ class Catalog:
         except FileNotFoundError:
             return False
 
-    def _schema_sidecar(self, schema: str, table: str) -> str:
-        return self.path(schema, table) + "._schema.json"
-
     def recorded_schema(self, schema: str, table: str) -> StructType | None:
         """The schema the catalog last wrote to this table, or None when
         there is no record or the directory changed since it was made."""
-        try:
-            with open(self._schema_sidecar(schema, table), encoding="utf-8") as fh:
-                rec = json.load(fh)
-        except FileNotFoundError:
-            return None
-        if rec.get("listing") != _listing(self.path(schema, table)):
-            return None
-        return StructType.fromJson(rec["schema"])
+        rec = _load_record(self.path(schema, table))
+        return None if rec is None else StructType.fromJson(rec["schema"])
 
-    def _record(self, schema: str, table: str, st: StructType | None) -> None:
-        """Record ``st`` as the table's schema as of its current listing;
-        ``None`` drops the record, so readers infer."""
-        side = self._schema_sidecar(schema, table)
+    def recorded_stats(self, schema: str, table: str) -> dict | None:
+        """``{"rows": n, "ranges": {col: (min, max)}}`` as recorded with the
+        table's last full write, values as a scan returns them; None when
+        there are none or the directory changed since."""
+        rec = _load_record(self.path(schema, table))
+        if rec is None or "rows" not in rec:
+            return None
+        ranges = {c: (_decode(r, "min"), _decode(r, "max")) for c, r in rec["ranges"].items()}
+        return {"rows": rec["rows"], "ranges": ranges}
+
+    def _record(self, schema: str, table: str, st: StructType | None, stats: dict | None = None) -> None:
+        """Record ``st`` (and ``stats``) as the table's as of its current
+        listing; ``st=None`` drops the record, so readers infer."""
+        side = _sidecar(self.path(schema, table))
         if st is None:
             if os.path.exists(side):
                 os.remove(side)
             return
-        rec = {"schema": _as_read(st).jsonValue(), "listing": _listing(self.path(schema, table))}
+        rec = {"schema": _as_read(st).jsonValue(), "listing": _listing(self.path(schema, table)), **(stats or {})}
         tmp = side + ".tmp"
         with open(tmp, "w", encoding="utf-8") as fh:
             json.dump(rec, fh)
@@ -224,13 +350,27 @@ class Catalog:
     def read_or_none(self, schema: str, table: str) -> DataFrame | None:
         return self.read(schema, table) if self.exists(schema, table) else None
 
-    def overwrite(self, df: DataFrame, schema: str, table: str, partition_by: list[str] | None = None) -> None:
+    def overwrite(
+        self,
+        df: DataFrame,
+        schema: str,
+        table: str,
+        partition_by: list[str] | None = None,
+        observation: Observation | None = None,
+    ) -> None:
         """Atomic full-refresh write: write to a temp dir, then swap. The
         self-referencing incremental pattern (read prior output while
         computing the new one) requires this — a direct overwrite would
-        truncate its own input before reading it."""
+        truncate its own input before reading it. ``observation``, when
+        given, is attached to ``df`` with (at least) the ``table_stats``
+        aggregates of ``df.schema``; the write counts them and, on the
+        columnar formats, they join the table's record (the text formats
+        write timestamps to the millisecond, so a scan could not match)."""
         atomic_swap_write(df, self.path(schema, table), partition_by, fmt=self.fmt)
-        self._record(schema, table, df.schema)
+        st, stats = df.schema, None
+        if observation is not None and self.fmt in ("parquet", "orc"):
+            stats = _stats_record(st, observation.get, partition_by)
+        self._record(schema, table, st, stats)
 
     def append(self, df: DataFrame, schema: str, table: str) -> None:
         self._record_after_merge(
