@@ -26,3 +26,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL
+
+
+def spark_job_id(spark) -> int:
+    """The id the next Spark job will get: the difference of two readings
+    is the number of jobs run in between."""
+    n = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    return n if isinstance(n, int) else n.get()
+
+
+@pytest.fixture
+def checkpoint_jobs(spark, monkeypatch):
+    """Records ``(first, next)`` Spark job ids around every
+    ``DataFrame.localCheckpoint`` call the test makes, so a test can tell
+    jobs a checkpoint ran from jobs run between checkpoints."""
+    spans: list[tuple[int, int]] = []
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        first = spark_job_id(spark)
+        out = real(self, *args, **kwargs)
+        spans.append((first, spark_job_id(spark)))
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return spans

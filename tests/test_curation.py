@@ -164,6 +164,54 @@ def test_cc_chain_converges_across_rounds(spark):
     assert got == {i: 0 for i in range(8)}
 
 
+def test_cc_labels_every_endpoint_and_drops_nulls(spark):
+    """Every non-NULL edge endpoint is labelled, whether or not it is in
+    ``nodes``; NULL ids give no row and relay no label."""
+    from unified_firmographic_data_pipeline_spark.operators.components import (
+        connected_components,
+    )
+
+    n = spark.createDataFrame([(1,), (2,), (None,), (5,)], "node long")
+    e = spark.createDataFrame(
+        [(1, None), (None, 2), (2, 3), (3, 1)], "src long, dst long"
+    )
+    got = {r["node"]: r["component"] for r in connected_components(n, e).collect()}
+    # 3 is only an endpoint, yet it is labelled and relays 1 to 2
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5}
+    e = spark.createDataFrame([(7, None), (None, 8), (9, 8)], "src long, dst long")
+    got = {r["node"]: r["component"] for r in connected_components(None, e).collect()}
+    assert got == {7: 7, 8: 8, 9: 8}
+
+
+#: Spark jobs of ``connected_components`` on the two-round fixture below
+#: (local[4], 4 shuffle partitions): the edge-list checkpoint and the two
+#: round checkpoints, and nothing else.
+CC_JOB_BUDGET = 9
+
+
+def test_cc_runs_jobs_only_inside_its_checkpoints(spark, checkpoint_jobs):
+    """Each round's change count comes from the round's checkpoint: no job
+    runs between one checkpoint and the next, or after the last."""
+    from tests.conftest import spark_job_id
+
+    from unified_firmographic_data_pipeline_spark.operators.components import (
+        connected_components,
+    )
+
+    # two stars: round 1 labels every leaf, round 2 changes nothing
+    n, e = _graph(spark, list(range(7)), [(0, 1), (0, 2), (3, 4), (3, 5)])
+    first = spark_job_id(spark)
+    out = connected_components(n, e)
+    last = spark_job_id(spark)
+    assert len(checkpoint_jobs) == 3, "edge list + two rounds"
+    assert [first] + [b for _, b in checkpoint_jobs] == [
+        a for a, _ in checkpoint_jobs
+    ] + [last], f"a job ran between checkpoints: {checkpoint_jobs}, {first}..{last}"
+    assert last - first <= CC_JOB_BUDGET
+    got = {r["node"]: r["component"] for r in out.collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 3, 6: 6}
+
+
 def test_cc_raises_when_bound_too_small(spark):
     import pytest as _pytest
 

@@ -11,6 +11,7 @@ from datetime import date, datetime
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import spark_job_id
 from tests.fixtures import (
     FORTUNE_ITEMS_T0,
     T0,
@@ -56,11 +57,6 @@ def _land(spark, cat, ts, row_id, wiki_rows=None, fortune_items=None):
     cat.append(raw_df(spark, fortune_payload(fortune_items), "fortune500", ts, row_id), "raw", "fortune_500")
 
 
-def _jobs(spark) -> int:
-    n = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-    return n if isinstance(n, int) else n.get()
-
-
 @pytest.fixture(scope="module")
 def two_nights(spark, tmp_path_factory):
     """The fixture pipeline after its initial load and a second night that
@@ -73,9 +69,9 @@ def two_nights(spark, tmp_path_factory):
     _land(spark, cat, T1, 1, fortune_items=moved)
     jobs = {}
     for m in GRAPH.topo_order():
-        j0 = _jobs(spark)
+        j0 = spark_job_id(spark)
         GRAPH.run(spark, cat, select=[m])
-        jobs[m] = _jobs(spark) - j0
+        jobs[m] = spark_job_id(spark) - j0
     return cat, jobs
 
 
@@ -281,9 +277,9 @@ def test_recorded_ranges_equal_the_scan(spark, tmp_path, los_angeles, rows):
     assert set(stats["ranges"]) == {"ts", "ntz", "d", "none_ts"}
     for col, (lo, hi) in stats["ranges"].items():
         assert (lo, hi) == _scan(scanned, col), col
-        j0 = _jobs(spark)
+        j0 = spark_job_id(spark)
         assert column_max(cat.read("core", "t"), col) == hi, col
-        assert _jobs(spark) == j0, f"max({col}) ran a Spark job"
+        assert spark_job_id(spark) == j0, f"max({col}) ran a Spark job"
     assert stats["ranges"]["none_ts"] == (None, None)
     if not rows:
         assert all(r == (None, None) for r in stats["ranges"].values())
@@ -303,9 +299,9 @@ def test_table_replaced_outside_the_catalog_scans_its_watermark(spark, tmp_path)
         if f.endswith(".parquet"):
             shutil.copyfile(tmp_path / "landing" / f, os.path.join(path, "landed-" + f))
     assert cat.recorded_stats("core", "t") is None
-    j0 = _jobs(spark)
+    j0 = spark_job_id(spark)
     assert high_watermark(cat.read("core", "t"), "ts") == later
-    assert _jobs(spark) > j0  # scanned
+    assert spark_job_id(spark) > j0  # scanned
 
 
 def test_scd2_batch_max_of_a_filtered_source_is_scanned(spark, tmp_path):

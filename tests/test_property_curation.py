@@ -32,10 +32,10 @@ pytestmark = pytest.mark.slow
 def _brute_components(nodes, edges):
     adj = {n: set() for n in nodes}
     for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
     label = {}
-    for start in sorted(nodes):
+    for start in sorted(adj):
         if start in label:
             continue
         stack, seen = [start], {start}
@@ -51,14 +51,30 @@ def _brute_components(nodes, edges):
     return label
 
 
+@pytest.mark.parametrize("node_set", ["all", "endpoint_subset", "none"])
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(edges=edges_strategy)
-def test_cc_matches_bruteforce(spark, edges):
-    nodes = list(range(10))
-    n = spark.createDataFrame([(x,) for x in nodes], "node long")
-    e = spark.createDataFrame(edges or [(0, 0)], "src long, dst long")
+@given(edges=edges_strategy, data=st.data())
+def test_cc_matches_bruteforce(spark, node_set, edges, data):
+    """Labels every id of ``nodes`` and every edge endpoint: ``nodes`` is
+    all ten ids, a strict subset of the endpoints, or ``None``."""
+    edges = edges or [(0, 0)]
+    ends = sorted({v for e in edges for v in e})
+    if node_set == "all":
+        nodes = list(range(10))
+    elif node_set == "endpoint_subset":
+        nodes = data.draw(
+            st.lists(st.sampled_from(ends), unique=True, max_size=len(ends) - 1)
+        )
+    else:
+        nodes = None
+    n = (
+        None
+        if nodes is None
+        else spark.createDataFrame([(x,) for x in nodes], "node long")
+    )
+    e = spark.createDataFrame(edges, "src long, dst long")
     got = {r["node"]: r["component"] for r in connected_components(n, e).collect()}
-    assert got == _brute_components(nodes, edges)
+    assert got == _brute_components(nodes or [], edges)
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))

@@ -11,6 +11,7 @@ The optimizations must not change what any operator computes:
 
 from __future__ import annotations
 
+import os
 import random
 
 from pyspark.sql import functions as F
@@ -85,13 +86,41 @@ def test_scan_guard_memoized_and_opt_in(spark, sf_small):
     d0 = dq._t(spark, sf_small, "documents")  # default: no guard probe
     assert dq._SCAN_UNDERPAR == {}
     d1 = dq._t(spark, sf_small, "documents", spread=True)
-    key = (f"{sf_small}/documents.parquet", spark.sparkContext.defaultParallelism)
+    path = f"{sf_small}/documents.parquet"
+    key = (path, os.stat(path).st_mtime_ns, spark.sparkContext.defaultParallelism)
     assert key in dq._SCAN_UNDERPAR
     # second guarded load answers from the memo (same decision, no re-probe)
     before = dict(dq._SCAN_UNDERPAR)
     d2 = dq._t(spark, sf_small, "documents", spread=True)
     assert dq._SCAN_UNDERPAR == before
     assert d0.count() == d1.count() == d2.count()
+
+
+def test_scan_guard_probes_a_rewritten_table_again(spark, tmp_path):
+    """The probe memo is keyed on the table path's mtime: a table rewritten
+    with a different file layout is probed again, not answered from the
+    decision made for its old layout."""
+    import unified_firmographic_data_pipeline_spark.plans.driver_queries as dq
+
+    target = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "documents.parquet")
+    rows = spark.range(64).select(F.col("id").alias("doc_id"))
+    rows.coalesce(1).write.parquet(path)
+    one_file = spark.read.parquet(path)
+    assert one_file.rdd.getNumPartitions() < target
+    assert dq._scan_guard(spark, one_file, path) is not one_file  # spread
+
+    rows.repartition(2 * target).write.mode("overwrite").parquet(path)
+    # one file per scan partition, whatever the files' sizes
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1k")
+    try:
+        many_files = spark.read.parquet(path)
+        assert many_files.rdd.getNumPartitions() >= target
+        assert dq._scan_guard(spark, many_files, path) is many_files
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_dedup_detector_pr_null_text_parity(spark, sf_small, tmp_path):

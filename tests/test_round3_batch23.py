@@ -292,22 +292,21 @@ def test_triangle_closure_auto_switch(spark):
     from pyspark.sql import functions as F
 
     from unified_firmographic_data_pipeline_spark.operators.triangles import (
-        _canonical_undirected,
         _use_broadcast_closure,
         triangle_stats,
     )
 
     edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (3, 5), (5, 6)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    und = _canonical_undirected(df, "src", "dst").localCheckpoint(eager=True)
 
-    # decision table: explicit flag wins; auto counts against the ceiling;
-    # the lazy tier broadcasts without forcing a job
-    assert _use_broadcast_closure(und, True, True, 0) is True
-    assert _use_broadcast_closure(und, True, False, 10**9) is False
-    assert _use_broadcast_closure(und, True, None, 10**9) is True
-    assert _use_broadcast_closure(und, True, None, 0) is False
-    assert _use_broadcast_closure(und, False, None, 0) is True
+    # decision table over the observed edge count: explicit flag wins; auto
+    # compares the count against the ceiling; the lazy tier has no count
+    # (None) and broadcasts
+    assert _use_broadcast_closure(7, True, 0) is True
+    assert _use_broadcast_closure(7, False, 10**9) is False
+    assert _use_broadcast_closure(7, None, 10**9) is True
+    assert _use_broadcast_closure(7, None, 0) is False
+    assert _use_broadcast_closure(None, None, 0) is True
 
     def plan_of(dfx) -> str:
         buf = io.StringIO()
@@ -353,27 +352,52 @@ def test_triangle_closure_auto_switch(spark):
     assert small.collect() == shuffled.collect()
 
 
-def test_closure_edge_count_memoized_per_input_frame(spark):
-    """The auto-switch's plan-time count() is memoized per (edges, src,
-    dst): composing triangle_stats AND enumerate_triangles over the same
-    edge frame pays the count once (round-5 advisor finding). Keys are
-    weak, so the memo never pins a frame alive."""
-    from unified_firmographic_data_pipeline_spark.operators import triangles as T
+def test_triangle_builds_run_only_checkpoint_jobs(spark, checkpoint_jobs):
+    """Building ``triangle_stats`` and ``enumerate_triangles`` on one edge
+    frame runs only their checkpoint jobs: the closure auto-switch reads
+    the edge count from an Observation on the edge-set checkpoint, so no
+    ``count`` job runs."""
+    from tests.conftest import spark_job_id
+    from unified_firmographic_data_pipeline_spark.operators.triangles import (
+        enumerate_triangles,
+        triangle_stats,
+    )
 
-    edges = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "src long, dst long")
-    und = T._canonical_undirected(edges, "src", "dst").localCheckpoint(eager=True)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4)], "src long, dst long"
+    )
+    first = spark_job_id(spark)
+    stats = triangle_stats(edges)
+    tris = enumerate_triangles(edges)
+    last = spark_job_id(spark)
+    assert len(checkpoint_jobs) == 4, "edge set + degree table, per build"
+    assert sum(b - a for a, b in checkpoint_jobs) == last - first
+    row = stats.first()
+    assert (row["n_edges"], row["n_triangles"]) == (4, 1)
+    assert [tuple(r) for r in tris.collect()] == [(1, 2, 3)]
 
-    calls = []
-    real_count = und.count
-    und.count = lambda: (calls.append(1), real_count())[1]  # instance shadow
 
-    key = (edges, "src", "dst")
-    assert T._memoized_edge_count(und, key) == 3
-    assert T._memoized_edge_count(und, key) == 3
-    assert len(calls) == 1, "second lookup must hit the memo, not count()"
-    # a different (src, dst) projection of the same frame counts separately
-    assert T._memoized_edge_count(und, (edges, "dst", "src")) == 3
-    assert len(calls) == 2
-    # no memo key -> always counts (the old behavior, used nowhere hot)
-    assert T._memoized_edge_count(und, None) == 3
-    assert len(calls) == 3
+def test_adjacency_closure_broadcasts_its_adjacency_once(spark, sf_small):
+    """The in-memory closure joins the per-pivot adjacency twice (as the
+    ``u`` and the ``v`` side). The final adaptive plan of
+    ``triangle_stats_copurchase`` builds and broadcasts it once: one
+    ``BroadcastExchange`` of the ``collect_list`` aggregate, and the ``v``
+    side is a ``ReusedExchange`` of it."""
+    import re
+
+    from unified_firmographic_data_pipeline_spark.plans import driver_queries as dq
+
+    df = dq.QUERIES["triangle_stats_copurchase"](spark, sf_small)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    adj = [
+        re.search(r"plan_id=(\d+)", line).group(1)
+        for line, nxt in zip(final, final[1:])
+        if "BroadcastExchange" in line and "collect_list(" in nxt
+    ]
+    assert len(adj) == 1, "\n".join(final)
+    assert sum("ObjectHashAggregate(keys=[lo" in line for line in final) == 2
+    reused = [line for line in final if "ReusedExchange [v#" in line]
+    assert len(reused) == 1 and f"plan_id={adj[0]}]" in reused[0], "\n".join(final)

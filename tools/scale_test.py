@@ -428,7 +428,10 @@ if __name__ == "__main__":
         "Notes: `triangle_stats_copurchase` runs the broadcast-closure plan"
     )
     lines.append(
-        "chosen by the round-5 AUTO-switch (edge count vs the 5M ceiling —"
+        "chosen by the round-5 AUTO-switch (edge count, observed at the"
+    )
+    lines.append(
+        "edge-set checkpoint, vs the 5M ceiling —"
     )
     lines.append(
         "operators/triangles.py:_use_broadcast_closure; past the ceiling the"
@@ -477,6 +480,10 @@ if __name__ == "__main__":
         "snapshot values, so the drift is ambient host noise, not the"
     )
     lines.append("round-6 change. Pinned cause: host drift; no code action.")
+    lines.append(
+        "The memo has since gone: the count is now read from an Observation"
+    )
+    lines.append("on the edge-set checkpoint, so no count() job runs at all.")
     lines.append(
         "Round-8 A/B on the `incremental_agg_merge` driver-run 2.31× floor"
     )

@@ -8,25 +8,22 @@ propagation / alternating star contraction ("Connected Components in
 MapReduce and Beyond", Kiveris et al., SOCC'14).
 
 Implementation: iterative min-label propagation entirely in DataFrame ops.
-Each round joins labels onto the (pre-partitioned, checkpointed) edge list
-to form neighbor messages, unions each node's OWN label row in as one more
-message, and takes ``min`` per node in a single map-side-combinable
-aggregation — one shuffle per round on the uniform node key. (Round 10
-optimization: the original shape aggregated neighbor minima and then joined
-them back onto the label table, paying a second exchange + join per round;
-the union-aggregate form computes ``least(own, min(neighbors))`` and the
-convergence flag ``min < own`` in the same aggregate, with the own-label
-row doubling as the change detector. Labels converge to the minimum node
-id reachable in the component either way — bit-identical output, one
-exchange and one join fewer per round.) Rounds are bounded by the graph
-diameter; dedup graphs are union-of-near-cliques, so 2-4 rounds in
-practice (star contraction's O(log n) bound matters for pathological
-chains; the loop shares the same per-round shape so swapping the step is
-local). Each round ``localCheckpoint``s the label frame: iterative plans
-otherwise grow exponentially in Catalyst and re-execute from the source
-every round. The edge list is hash-repartitioned on the join key ``d``
-BEFORE its one-time checkpoint, so every round's message join reuses that
-partitioning instead of re-exchanging the (much larger) edge side.
+The symmetrized edge list is ``localCheckpoint``ed once. Round 1 needs no
+join: every label is still the node's own id, so the message along
+``(s, d)`` is ``d`` and the round is one ``min`` per node over the node
+rows and the edge rows. Every later round joins the labels onto the edge
+list to form neighbor messages, unions each node's OWN label row in as one
+more message, and takes ``min`` per node in a single map-side-combinable
+aggregation — one shuffle per round on the uniform node key. The same
+aggregate yields the old label (the own row), so whether a node's label
+fell is a column of the round's output; an ``Observation`` on the round's
+``localCheckpoint`` counts those rows, so the convergence test costs no
+Spark job of its own. Rounds are bounded by the graph diameter; dedup
+graphs are union-of-near-cliques, so 2-4 rounds in practice (star
+contraction's O(log n) bound matters for pathological chains; the loop
+shares the same per-round shape so swapping the step is local). Each
+round is checkpointed: iterative plans otherwise grow exponentially in
+Catalyst and re-execute from the source every round.
 
 The result (min reachable id) is partition- and iteration-order-independent,
 so it is deterministic and SQL-expressible — the DuckDB oracle computes the
@@ -35,12 +32,25 @@ same labels with a recursive CTE.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
+def _checkpoint_round(labels: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize one round's ``(node, component, __old)`` frame and
+    return ``(node, component)`` with the number of nodes whose label
+    fell, counted by the checkpoint's own job."""
+    obs = Observation()
+    out = (
+        labels.observe(obs, F.count_if(F.col("component") < F.col("__old")).alias("n"))
+        .select("node", "component")
+        .localCheckpoint(eager=True)
+    )
+    return out, obs.get["n"]
+
+
 def connected_components(
-    nodes: DataFrame,
+    nodes: DataFrame | None,
     edges: DataFrame,
     node_col: str = "node",
     src_col: str = "src",
@@ -48,70 +58,70 @@ def connected_components(
     max_iter: int = 25,
 ) -> DataFrame:
     """Label every node with the smallest node id in its connected
-    component. ``nodes`` may contain isolated nodes (they label themselves)
-    and MUST be distinct (one row per node id) — the union-aggregate round
-    groups by node, so a duplicated input id would collapse to one output
-    row where the round-9 join-back shape echoed the duplicate; every
-    caller passes a key/distinct projection. ``edges`` is treated as
-    undirected (symmetrized internally).
+    component. The labelled nodes are the ids in ``nodes`` plus every
+    non-NULL endpoint of ``edges``; an endpoint need not appear in
+    ``nodes``, and ``nodes`` may be ``None`` when every node is an
+    endpoint. Rows of ``nodes`` with no edge are isolated and label
+    themselves; duplicate ids in ``nodes`` give one row. ``edges`` is
+    treated as undirected (symmetrized internally). NULL ids are dropped:
+    a NULL node gets no row, and an edge with a NULL endpoint connects
+    nothing (its other endpoint is still labelled, by itself).
 
     Returns ``(node, component)``. Raises if ``max_iter`` rounds don't
     converge (diameter > max_iter — raise the bound for chain-shaped
     graphs)."""
+    s, d = F.col(src_col), F.col(dst_col)
     sym = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .unionByName(edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d")))
+        edges.select(s.alias("s"), d.alias("d"))
+        .unionByName(edges.select(d.alias("s"), s.alias("d")))
+        # a NULL s would be a NULL label row; a NULL d never joins a label
+        .filter(F.col("s").isNotNull())
         .distinct()
-        # partition once on the per-round join key: every round's message
-        # join then reuses this layout instead of re-exchanging the edges
-        .repartition("d")
+        .localCheckpoint(eager=True)
     )
-    labels = nodes.select(F.col(node_col).alias("node"), F.col(node_col).alias("component"))
-    labels = labels.localCheckpoint(eager=True)
-    sym = sym.localCheckpoint(eager=True)
+    # round 1: every label is the node's own id, so the message to s along
+    # (s, d) is d; least() keeps s itself and ignores a NULL d
+    msgs = sym.select(F.col("s").alias("node"), F.least("s", "d").alias("__lbl"))
+    if nodes is not None:
+        msgs = msgs.unionByName(
+            nodes.select(F.col(node_col).alias("node"), F.col(node_col).alias("__lbl"))
+            .filter(F.col("node").isNotNull())
+        )
+    labels, n_changed = _checkpoint_round(
+        msgs.groupBy("node").agg(F.min("__lbl").alias("component"))
+        .withColumn("__old", F.col("node"))
+    )
 
-    for _ in range(max_iter):
+    for _ in range(max_iter - 1):
+        if n_changed == 0:
+            break
         # one message per directed edge (the neighbor's current label) plus
         # each node's OWN label row; a single min-aggregate per node yields
         # least(own, min(neighbors)) AND the old label (the own row is the
-        # only one with __own=true) for the convergence flag — one shuffle
-        # per round, no join-back
-        msgs = (
-            sym.join(labels, sym["d"] == labels["node"])
-            .select(
-                F.col("s").alias("node"),
-                F.col("component").alias("__lbl"),
-                F.lit(False).alias("__own"),
-            )
+        # only one with __own=true) — one shuffle per round, no join-back.
+        # Every s is labelled since round 1, so every group has an own row.
+        msgs = sym.join(labels, sym["d"] == labels["node"]).select(
+            F.col("s").alias("node"),
+            F.col("component").alias("__lbl"),
+            F.lit(False).alias("__own"),
         )
         own = labels.select(
             "node", F.col("component").alias("__lbl"), F.lit(True).alias("__own")
         )
-        new_labels = (
+        labels, n_changed = _checkpoint_round(
             msgs.unionByName(own)
             .groupBy("node")
             .agg(
                 F.min("__lbl").alias("component"),
                 F.min(F.when(F.col("__own"), F.col("__lbl"))).alias("__old"),
             )
-            # edges may reference ids outside `nodes`; groups with no own
-            # row are not label rows (matches the old left-join semantics)
-            .filter(F.col("__old").isNotNull())
-            .select(
-                "node",
-                "component",
-                (F.col("component") < F.col("__old")).alias("__changed"),
-            )
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        n_changed = new_labels.filter(F.col("__changed")).count()
-        labels = new_labels.drop("__changed")
-        if n_changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(graph diameter exceeds the bound)"
-    )
+    if n_changed:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            "(graph diameter exceeds the bound)"
+        )
+    return labels
 
 
 def component_representatives(

@@ -33,6 +33,7 @@ enforces the invariant.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -81,13 +82,15 @@ def q(name: str, sql: str | None = None):
     return deco
 
 
-#: memo of the per-(table path, target) under-parallel-scan probe.
+#: memo of the per-(table path, mtime, target) under-parallel-scan probe.
 #: ``df.rdd.getNumPartitions()`` forces full physical planning through the
 #: Python RDD-conversion path, adding driver latency to EVERY guarded load;
 #: the answer is a pure function of the file layout and the session
 #: parallelism, so probe once per table and reuse (plan-property memo, not
 #: a result cache — every query still computes from the parquet input).
-_SCAN_UNDERPAR: dict[tuple[str, int], bool] = {}
+#: The path's mtime is in the key, so a table rewritten with a different
+#: file layout is probed again.
+_SCAN_UNDERPAR: dict[tuple[str, int, int], bool] = {}
 
 
 def _scan_guard(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:
@@ -106,7 +109,11 @@ def _scan_guard(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:
     near_dup_candidates_md5's signature materialization was one 4.5 s task;
     the guard spreads it across the 32 cores.)"""
     target = spark.sparkContext.defaultParallelism
-    memo_key = (key, target)
+    try:
+        stamp = os.stat(key).st_mtime_ns
+    except OSError:
+        stamp = 0
+    memo_key = (key, stamp, target)
     underpar = _SCAN_UNDERPAR.get(memo_key)
     if underpar is None:
         underpar = df.rdd.getNumPartitions() < target
@@ -18609,14 +18616,11 @@ _MODIFIED_FIRST: dict[str, int] = {
     # r13: every shared-key pair fan-out is operators/pairs.py:group_pairs
     # (one dialect; NULL keys dropped). The triangle entries were r5's
     # closure auto-switch, green r5; dedup_detector_pr was r12's NULL-prefix
-    # fix.
+    # fix. The three component queries moved on to r15 below.
     "triangle_stats_copurchase": 13,
     "truss_edge_support_hist": 13,
     "local_clustering_topk": 13,
     "dedup_detector_pr": 13,
-    "neardup_cluster_components": 13,
-    "neardup_cluster_keep_best": 13,
-    "leakage_safe_split_counts": 13,
     "market_basket_pairs": 13,
     "basket_rules_lift": 13,
     "item_cosim_jaccard_topk": 13,
@@ -18628,6 +18632,18 @@ _MODIFIED_FIRST: dict[str, int] = {
     "modularity_onehop_communities": 13,
     "local_bridges_count": 13,
     "random_walk_corpus": 13,
+    # r15: connected_components labels every edge endpoint and checkpoints
+    # (node, component) only, so every query reading its labels has a new
+    # plan; the keep-best survivors also anti-join against those labels.
+    # The first three were r13 group_pairs rewrites too.
+    "neardup_cluster_components": 15,
+    "neardup_cluster_keep_best": 15,
+    "leakage_safe_split_counts": 15,
+    "entity_resolution_golden": 15,
+    "entity_resolution_incremental": 15,
+    "entity_resolution_clusters": 15,
+    "entity_survivorship_attributes": 15,
+    "embedding_keepbest_survivors": 15,
 }
 
 

@@ -194,7 +194,10 @@ def resolve_entities_incremental(
        the full-batch label: if a new record bridges two old entities,
        the merged component's min is the min of both entity ids — the
        same id a from-scratch resolve of the union would pick (pinned by
-       test: incremental == full batch under shared weights).
+       test: incremental == full batch under shared weights). Only the
+       new ids are passed as nodes: the old ids and entity ids are edge
+       endpoints, which the component step labels anyway, so the scored
+       pair graph is built once.
     4. Old entities touched by a merge are RELABELED through an
        (entity_id → component) map — a key-joined update of the landed
        table, never an old x old recompute; untouched entities coalesce
@@ -240,13 +243,10 @@ def resolve_entities_incremental(
     graph_edges = edges.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(anchors)
-    nodes = (
-        new_records.select(F.col(id_col).alias("node"))
-        .unionByName(graph_edges.select(F.col("src").alias("node")))
-        .unionByName(graph_edges.select(F.col("dst").alias("node")))
-        .distinct()
+    # every graph endpoint is labelled, so the nodes are the new ids alone
+    comp = connected_components(
+        new_records.select(F.col(id_col).alias("node")), graph_edges, max_iter=max_iter
     )
-    comp = connected_components(nodes, graph_edges, max_iter=max_iter)
 
     # entity_id -> merged component label (only for touched entities)
     ent_map = comp.withColumnRenamed("node", "entity_id").withColumnRenamed(

@@ -198,14 +198,8 @@ def _keep_best_from_pairs(
     MinHash-LSH (:func:`near_dedup_keep_best`) or embedding cosine LSH
     (:func:`embedding_dedup_keep_best`) — the retention semantics must
     never diverge between modalities."""
-    touched = (
-        pairs.select(F.col("id_a").alias("node"))
-        .unionByName(pairs.select(F.col("id_b").alias("node")))
-        .distinct()
-    )
-    labeled = connected_components(
-        touched, pairs, node_col="node", src_col="id_a", dst_col="id_b"
-    )
+    # the labelled nodes are exactly the docs appearing in a pair
+    labeled = connected_components(None, pairs, src_col="id_a", dst_col="id_b")
     scored = labeled.join(
         docs.select(
             F.col(id_col).alias("node"), F.col(quality_col).alias("__q")
@@ -216,7 +210,7 @@ def _keep_best_from_pairs(
         F.col("rep_id").alias(id_col)
     )
     untouched = docs.join(
-        touched.withColumnRenamed("node", id_col), id_col, "left_anti"
+        labeled.select(F.col("node").alias(id_col)), id_col, "left_anti"
     )
     survivors = docs.join(reps, id_col, "left_semi")
     return untouched.unionByName(survivors)
