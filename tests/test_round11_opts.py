@@ -87,7 +87,7 @@ def test_scan_guard_memoized_and_opt_in(spark, sf_small):
     assert dq._SCAN_UNDERPAR == {}
     d1 = dq._t(spark, sf_small, "documents", spread=True)
     path = f"{sf_small}/documents.parquet"
-    key = (path, os.stat(path).st_mtime_ns, spark.sparkContext.defaultParallelism)
+    key = (path, dq._file_id(path), spark.sparkContext.defaultParallelism)
     assert key in dq._SCAN_UNDERPAR
     # second guarded load answers from the memo (same decision, no re-probe)
     before = dict(dq._SCAN_UNDERPAR)
@@ -97,7 +97,7 @@ def test_scan_guard_memoized_and_opt_in(spark, sf_small):
 
 
 def test_scan_guard_probes_a_rewritten_table_again(spark, tmp_path):
-    """The probe memo is keyed on the table path's mtime: a table rewritten
+    """The probe memo is keyed on the table file's identity: a table rewritten
     with a different file layout is probed again, not answered from the
     decision made for its old layout."""
     import unified_firmographic_data_pipeline_spark.plans.driver_queries as dq

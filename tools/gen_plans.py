@@ -1,15 +1,28 @@
 #!/usr/bin/env python
 """Regenerate PLANS.md: formatted physical plans for representative queries
-with the scale-relevant features annotated. Run: python tools/gen_plans.py"""
+with the scale-relevant features annotated. Run: python tools/gen_plans.py
+
+``python tools/gen_plans.py --out-dir DIR QUERY [QUERY ...]`` instead writes
+each named query's whole formatted plan to ``DIR/<query>.txt``: run it on two
+trees and diff the directories to see what a change does to those plans.
+
+Expression and plan ids are rewritten to ``#N`` / ``plan_id=N`` before
+writing. They count what the process allocated earlier, so without this a
+change that allocates one id more rewrites every later plan. Paths inside
+the checkout are written relative to it, so two checkouts of the same
+tree write the same bytes."""
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod
 from unified_firmographic_data_pipeline_spark.session import get_spark
@@ -274,11 +287,17 @@ SHOWCASE = {
 }
 
 
-def main() -> None:
-    spark = get_spark(
-        master="local[8]", extra_conf={"spark.sql.shuffle.partitions": "8"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+def explain(df) -> str:
+    """``df.explain("formatted")`` with ids and checkout paths normalized."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    plan = re.sub(r"#\d+L?", "#N", buf.getvalue())
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    return plan.replace(f"file:{ROOT}/", "file:./")
+
+
+def plans_md(spark, sf_dir: str) -> None:
     queries = entry_mod.queries()
     out = [
         "# PLANS — representative physical plans\n",
@@ -289,11 +308,7 @@ def main() -> None:
         "no un-allowlisted BroadcastNestedLoopJoin, pushdown pinned).\n",
     ]
     for name, blurb in SHOWCASE.items():
-        df = queries[name](spark, "/root/testdata/sf0.001")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = explain(queries[name](spark, sf_dir))
         # keep the tree + the scan details; drop the long per-node dumps
         tree, _, details = plan.partition("\n\n")
         keep = [d for d in details.split("\n\n") if "Scan parquet" in d.split("\n")[0]]
@@ -311,6 +326,35 @@ def main() -> None:
     with open("PLANS.md", "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
+
+
+def dump(spark, sf_dir: str, out_dir: str, names: list[str]) -> None:
+    queries = entry_mod.queries()
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(explain(queries[name](spark, sf_dir)))
+        print(f"wrote {path}")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--sf-dir", default=entry_mod.SF_SMOKE_DIR,
+                    help="directory of the <table>.parquet files to plan over")
+    ap.add_argument("--out-dir", help="write the named queries' plans here, not PLANS.md")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if bool(args.out_dir) != bool(args.queries):
+        ap.error("--out-dir and query names go together")
+    spark = get_spark(
+        master="local[8]", extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.out_dir:
+        dump(spark, args.sf_dir, args.out_dir, args.queries)
+    else:
+        plans_md(spark, args.sf_dir)
 
 
 if __name__ == "__main__":

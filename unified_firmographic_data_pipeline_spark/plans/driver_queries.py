@@ -38,6 +38,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 from unified_firmographic_data_pipeline_spark.functions.keys import NULL_SENTINEL, surrogate_key
 from unified_firmographic_data_pipeline_spark.functions.text import (
@@ -82,15 +83,26 @@ def q(name: str, sql: str | None = None):
     return deco
 
 
-#: memo of the per-(table path, mtime, target) under-parallel-scan probe.
+def _file_id(path: str) -> tuple[int, int, int] | None:
+    """``(st_ino, st_size, st_mtime_ns)`` of ``path``: what the two plan-
+    property memos below take as "the same file". None when the path cannot
+    be stat'ed (a remote URI, a missing table)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+#: memo of the per-(table file, target) under-parallel-scan probe.
 #: ``df.rdd.getNumPartitions()`` forces full physical planning through the
 #: Python RDD-conversion path, adding driver latency to EVERY guarded load;
 #: the answer is a pure function of the file layout and the session
 #: parallelism, so probe once per table and reuse (plan-property memo, not
 #: a result cache — every query still computes from the parquet input).
-#: The path's mtime is in the key, so a table rewritten with a different
+#: The file's identity is in the key, so a table rewritten with a different
 #: file layout is probed again.
-_SCAN_UNDERPAR: dict[tuple[str, int, int], bool] = {}
+_SCAN_UNDERPAR: dict[tuple[str, tuple[int, int, int] | None, int], bool] = {}
 
 
 def _scan_guard(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:
@@ -109,17 +121,45 @@ def _scan_guard(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:
     near_dup_candidates_md5's signature materialization was one 4.5 s task;
     the guard spreads it across the 32 cores.)"""
     target = spark.sparkContext.defaultParallelism
-    try:
-        stamp = os.stat(key).st_mtime_ns
-    except OSError:
-        stamp = 0
-    memo_key = (key, stamp, target)
+    memo_key = (key, _file_id(key), target)
     underpar = _SCAN_UNDERPAR.get(memo_key)
     if underpar is None:
         underpar = df.rdd.getNumPartitions() < target
         _SCAN_UNDERPAR[memo_key] = underpar
     if underpar:
         return df.repartition(target)
+    return df
+
+
+#: session confs whose values change the schema parquet inference returns
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+#: memo of the schema parquet inference returned for one table file under
+#: one set of ``_INFER_CONFS`` values (see ``_t``)
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per file
+    (see ``_t``): a schema-less read runs one footer-inference job, a read
+    given the schema runs none. A directory's key sees the directory entry
+    only, not the files in it."""
+    fid = _file_id(path)
+    if fid is None:
+        return spark.read.parquet(path)
+    key = (path, fid, *(spark.conf.get(c) for c in _INFER_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
     return df
 
 
@@ -143,25 +183,31 @@ def _t(
     map_functions_token_stats 0.28→0.64 s, ...). The relational facts
     (lineitem/orders/events/...) are never guarded for the same reason
     (A/B: truss +1.7 s, entity_resolution_incremental +1.8 s when
-    guarded)."""
+    guarded).
+
+    Every read goes through ``_read_parquet``: a table file's schema is
+    inferred on its first read only and kept in ``_SCHEMAS``, keyed on the
+    file's ``(st_ino, st_size, st_mtime_ns)`` and the session values of the
+    parquet-inference confs (``_INFER_CONFS``), so a rewritten file or a
+    changed setting is inferred again. The memo holds ``StructType``s
+    only: it persists nothing and caches no data."""
+    path = f"{sf_dir}/{name}.parquet"
+    df = _read_parquet(spark, path)
     if name == "events":
-        # events.parquet has stored ts as TIMESTAMP(NANOS) (surfacing as a
-        # long, or natively as TIMESTAMP_NTZ depending on writer/reader
+        # events.parquet may store ts as TIMESTAMP(NANOS) (surfacing as a
+        # long under the session's ``nanosAsLong``, see session.py), or as
+        # micros (natively TIMESTAMP_NTZ depending on writer/reader
         # version). Normalize every variant to session-TZ TIMESTAMP (the
         # session pins UTC) so all queries see one type: DuckDB's naive
         # micros TIMESTAMP and our UTC instant carry identical wall times.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        from pyspark.sql.types import LongType, TimestampNTZType
-
-        if isinstance(df.schema["ts"].dataType, LongType):
+        ts = df.schema["ts"].dataType
+        if isinstance(ts, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
+        elif isinstance(ts, TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if spread and name in ("documents", "embeddings"):
-        df = _scan_guard(spark, df, f"{sf_dir}/{name}.parquet")
+        df = _scan_guard(spark, df, path)
     return df
 
 

@@ -31,6 +31,10 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Parquet writes: dictionary+zstd is the right default for wide fact tables.
     "spark.sql.parquet.compression.codec": "zstd",
+    # Parquet TIMESTAMP(NANOS) columns read as longs (Spark rejects them
+    # otherwise); set for the whole session, so one read never changes the
+    # type later reads infer. driver_queries._t normalizes events.ts.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Don't let tiny local tests create 200 shuffle files; AQE coalesces
     # upward-bounded partition counts anyway.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
