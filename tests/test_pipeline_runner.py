@@ -1,11 +1,16 @@
 """The model runner around the firmographic pipeline: the catalog's schema
 and statistics record, the checks that ride each model's write, the run
-manifest, and the number of Spark jobs a night costs per model."""
+manifest, the number of Spark jobs a night costs per model, and the
+concurrent runner's contract (siblings overlap; a failure starts nothing
+new; the manifest keeps ``topo_order()``)."""
 
 from __future__ import annotations
 
 import os
 import shutil
+import sys
+import threading
+import time
 from datetime import date, datetime
 
 import pytest
@@ -25,7 +30,7 @@ from tests.fixtures import (
 from unified_firmographic_data_pipeline_spark.operators.incremental import high_watermark
 from unified_firmographic_data_pipeline_spark.operators.scd2 import VALID_TO, scd2_apply, scd2_init
 from unified_firmographic_data_pipeline_spark.plans.firmographics import GRAPH
-from unified_firmographic_data_pipeline_spark.plans.graph import ModelGraph, model
+from unified_firmographic_data_pipeline_spark.plans.graph import ModelGraph, ModelSpec, model
 from unified_firmographic_data_pipeline_spark.quality.expect import QualityError, expect
 from unified_firmographic_data_pipeline_spark.sources.catalog import Catalog, column_max
 
@@ -60,30 +65,41 @@ def _land(spark, cat, ts, row_id, wiki_rows=None, fortune_items=None):
 @pytest.fixture(scope="module")
 def two_nights(spark, tmp_path_factory):
     """The fixture pipeline after its initial load and a second night that
-    re-lands both sources with Walmart moved; returns the catalog and the
-    jobs each model ran on the second night."""
-    cat = Catalog(spark, str(tmp_path_factory.mktemp("two_nights")))
+    re-lands both sources with Walmart moved; returns the catalog, the jobs
+    each model ran on the second night run one model at a time, and the
+    jobs the same night cost as one whole run (on a copy of the catalog)."""
+    root = tmp_path_factory.mktemp("two_nights")
+    cat = Catalog(spark, str(root / "wh"))
     _land(spark, cat, T0, 0)
     GRAPH.run(spark, cat)
     moved = [fortune_item("Walmart", 1, "walmart", city="Dallas", state="TX"), *FORTUNE_ITEMS_T0[1:]]
     _land(spark, cat, T1, 1, fortune_items=moved)
+    shutil.copytree(cat.root, root / "whole")
     jobs = {}
     for m in GRAPH.topo_order():
         j0 = spark_job_id(spark)
         GRAPH.run(spark, cat, select=[m])
         jobs[m] = spark_job_id(spark) - j0
-    return cat, jobs
+    j0 = spark_job_id(spark)
+    GRAPH.run(spark, Catalog(spark, str(root / "whole")))
+    return cat, jobs, spark_job_id(spark) - j0
 
 
 def test_night_job_budget(two_nights):
-    _, jobs = two_nights
+    _, jobs, _ = two_nights
     assert set(jobs) == set(JOB_BUDGET)
     over = {m: f"{n} jobs > budget {JOB_BUDGET[m]}" for m, n in jobs.items() if n > JOB_BUDGET[m]}
     assert not over, f"models over their Spark job budget: {over}"
 
 
+def test_whole_night_costs_the_sum_of_its_models(two_nights):
+    # running models side by side adds no Spark job to a night
+    _, jobs, whole = two_nights
+    assert whole == sum(jobs.values())
+
+
 def test_recorded_schema_matches_inference(spark, two_nights):
-    cat, _ = two_nights
+    cat, _, _ = two_nights
     tables = [
         (s, t)
         for s in sorted(os.listdir(cat.root))
@@ -186,6 +202,176 @@ def test_manifest_survives_a_failing_model(spark, tmp_path):
     assert rows["first"]["message"] is None
     assert rows["second"]["status"] == "error" and rows["second"]["rows"] is None
     assert rows["second"]["message"] == "RuntimeError: source unavailable"
+    # a model starts only after each of its dependencies has finished
+    for name, r in rows.items():
+        for dep in g.models[name].deps:
+            assert r["started_sec"] >= rows[dep]["started_sec"] + rows[dep]["wall_sec"], (dep, name)
+
+
+def _spy_manifest(cat):
+    """Record the model order of every manifest the runner appends."""
+    seen = []
+    append = cat.append
+
+    def spy(df, schema, table):
+        if (schema, table) == ("_meta", "run_metadata"):
+            seen.append([r["model"] for r in df.collect()])
+        append(df, schema, table)
+
+    cat.append = spy
+    return seen
+
+
+def test_sibling_models_run_at_the_same_time(spark, tmp_path):
+    g = ModelGraph()
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    both_running = threading.Barrier(2, timeout=30)
+
+    @model(g, schema="core")
+    def left(ctx):
+        both_running.wait()  # passes only while `right` is running too
+        return ctx.spark.range(2)
+
+    @model(g, schema="core")
+    def right(ctx):
+        both_running.wait()
+        return ctx.spark.range(3)
+
+    @model(g, schema="core", deps=("left", "right"))
+    def joined(ctx):
+        return ctx.ref("left").union(ctx.ref("right"))
+
+    status = g.run(spark, cat)
+    assert list(status) == g.topo_order() and set(status.values()) == {"ok"}
+    assert cat.read("core", "joined").count() == 5
+
+
+def test_a_failure_lets_running_models_finish_and_starts_nothing(spark, tmp_path):
+    g = ModelGraph()
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    manifests = _spy_manifest(cat)
+    slow_started, boom_failed = threading.Event(), threading.Event()
+    started = []
+
+    @model(g, schema="core")
+    def slow(ctx):
+        slow_started.set()
+        assert boom_failed.wait(30)
+        time.sleep(0.5)  # the runner sees `boom` fail before this model finishes
+        return ctx.spark.range(3)
+
+    @model(g, schema="core")
+    def boom(ctx):
+        assert slow_started.wait(30)
+        boom_failed.set()
+        raise RuntimeError("feed missing")
+
+    @model(g, schema="core", deps=("boom",))
+    def after_boom(ctx):
+        started.append("after_boom")
+        return ctx.ref("boom")
+
+    @model(g, schema="core", deps=("slow",))
+    def after_slow(ctx):
+        started.append("after_slow")
+        return ctx.ref("slow")
+
+    with pytest.raises(RuntimeError, match="feed missing"):
+        g.run(spark, cat, record_metadata=True)
+    assert started == []
+    assert cat.read("core", "slow").count() == 3
+    assert not cat.exists("core", "boom")
+    order = g.topo_order()
+    assert manifests == [[m for m in order if m in ("slow", "boom")]]
+    rows = {r["model"]: r["status"] for r in cat.read("_meta", "run_metadata").collect()}
+    assert rows == {"slow": "ok", "boom": "error"}
+
+
+def test_run_raises_the_first_failure_in_topo_order(spark, tmp_path):
+    g = ModelGraph()
+    for name in ("a", "b"):
+        g.register(ModelSpec(name=name, fn=lambda ctx: fail(ctx.current.name), schema="core"))
+    first, second = g.topo_order()
+    second_failed = threading.Event()
+
+    def fail(name):
+        if name == first:
+            assert second_failed.wait(30)  # the model first in topo order fails last
+        else:
+            second_failed.set()
+        raise RuntimeError(name)
+
+    with pytest.raises(RuntimeError, match=f"^{first}$"):
+        g.run(spark, Catalog(spark, str(tmp_path / "wh")))
+
+
+def test_a_failed_check_starts_no_dependent(spark, tmp_path):
+    g = ModelGraph()
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    started = []
+
+    @model(g, schema="core", tests=lambda ctx, df: expect(df).unique(["k"]))
+    def dup(ctx):
+        return ctx.spark.range(2).withColumn("k", F.lit(1))
+
+    @model(g, schema="core", deps=("dup",))
+    def child(ctx):
+        started.append("child")
+        return ctx.ref("dup")
+
+    with pytest.raises(QualityError, match=r"unique\(k\): 1 violation"):
+        g.run(spark, cat)
+    assert cat.read("core", "dup").count() == 2  # written, then failed its check
+    assert started == []
+
+
+def test_concurrent_dependents_build_an_ephemeral_model_once(spark, tmp_path):
+    # more dependents than cores, all asking at once under a short switch
+    # interval: a lost check-then-build race would call `base` twice
+    g = ModelGraph()
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat.overwrite(spark.range(8).withColumnRenamed("id", "n"), "raw", "nums")
+    calls = []
+    parts = [f"p{i}" for i in range(8)]
+    together = threading.Barrier(len(parts), timeout=30)
+
+    @model(g, schema="staging", materialized="ephemeral")
+    def base(ctx):
+        calls.append(ctx.current.name)
+        time.sleep(0.2)  # long enough for every other dependent to ask for it
+        return ctx.source("raw", "nums")
+
+    def part(ctx):
+        together.wait()
+        return ctx.ref("base").filter(F.col("n") == int(ctx.current.name[1:]))
+
+    for name in parts:
+        g.register(ModelSpec(name=name, fn=part, schema="core", deps=("base",)))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        status = g.run(spark, cat, select=parts)
+    finally:
+        sys.setswitchinterval(interval)
+    assert status == dict.fromkeys(g.topo_order(parts), "ok")
+    assert calls == ["base"]
+    assert [[r.n for r in cat.read("core", name).collect()] for name in parts] == [[i] for i in range(8)]
+
+
+def test_night_jobs_carry_the_callers_job_group(spark, tmp_path):
+    cat = _initial(spark, tmp_path)
+    sc = spark.sparkContext
+    j0 = spark_job_id(spark)
+    sc.setJobGroup("fixture-night", "the initial load")
+    try:
+        GRAPH.run(spark, cat)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    jobs = set(range(j0, spark_job_id(spark)))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(jobs) > 9
+    assert set(sc.statusTracker().getJobIdsForGroup("fixture-night")) == jobs
 
 
 def test_manifest_rows_and_check_failure(spark, tmp_path):

@@ -2,8 +2,7 @@
 
 Each model is a pure function ``(ctx) -> DataFrame`` registered with a name,
 schema/layer, dependency list (the ``ref()`` edges), and a materialization
-strategy. ``run()`` topologically sorts and executes; each result goes to a
-materializer:
+strategy. Each result goes to a materializer:
 
 - ``table``       -> atomic overwrite (dbt ``+materialized: table``).
 - ``incremental`` -> watermark delta is the *model's* job: it calls
@@ -13,19 +12,32 @@ materializer:
                      key (dbt ``+materialized: incremental`` +
                      ``+unique_key``, ``dbt_project.yml:35-56``).
 - ``snapshot``    -> SCD2 fold via ``scd2_apply`` (dbt snapshot, §2.J).
+- ``ephemeral``   -> nothing written; ``ref()`` inlines the logical plan.
+
+``run()`` builds, like dbt's thread pool, every model whose selected
+dependencies have been written and checked, all at the same time: siblings
+overlap on the driver and on the executors, and a run waits on its longest
+dependency chain, not on the sum of its models. The width of the DAG is the
+only bound on that concurrency; there is no option for it. Each model's
+build, write and checks are the same Spark actions a one-model run makes.
 
 The IR of the whole cascade is the Catalyst logical plan — nothing here
-executes row data on the driver; the runner only sequences writes.
+executes row data on the driver.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import threading
+import time
+import uuid
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from dataclasses import dataclass, field, replace
 from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from unified_firmographic_data_pipeline_spark.operators.incremental import upsert
 from unified_firmographic_data_pipeline_spark.operators.scd2 import scd2_apply
@@ -51,28 +63,31 @@ class ModelSpec:
 class Context:
     """What a model function sees: the session, the catalog (for ``ref`` /
     ``source`` reads) and its own prior materialization (for incremental
-    watermarks — the ``{{ this }}`` analogue)."""
+    watermarks — the ``{{ this }}`` analogue). A run gives every model its
+    own Context; they share the ephemeral plans built so far."""
 
     spark: SparkSession
     catalog: Catalog
     graph: "ModelGraph"
     current: ModelSpec | None = None
     _ephemeral_cache: dict[str, DataFrame] = field(default_factory=dict)
+    _ephemeral_lock: threading.RLock = field(default_factory=threading.RLock)
+
+    def of(self, spec: ModelSpec) -> "Context":
+        """The Context ``spec`` builds in, sharing this one's ephemeral plans."""
+        return replace(self, current=spec)
 
     def ref(self, name: str) -> DataFrame:
         spec = self.graph.models[name]
         if spec.materialized == "ephemeral":
             # dbt inlines ephemeral models as CTEs; the Spark analogue is
             # composing the unexecuted logical plan directly. Memoized per
-            # Context (= per run) so diamond deps build the subplan once.
-            if name not in self._ephemeral_cache:
-                prev = self.current
-                self.current = spec
-                try:
-                    self._ephemeral_cache[name] = spec.fn(self)
-                finally:
-                    self.current = prev
-            return self._ephemeral_cache[name]
+            # run, under a lock, so diamond deps and concurrent dependents
+            # build the subplan once.
+            with self._ephemeral_lock:
+                if name not in self._ephemeral_cache:
+                    self._ephemeral_cache[name] = spec.fn(self.of(spec))
+                return self._ephemeral_cache[name]
         return self.catalog.read(spec.schema, name)
 
     def source(self, schema: str, table: str) -> DataFrame:
@@ -111,7 +126,20 @@ class ModelGraph:
         run_tests: bool = True,
         record_metadata: bool = False,
     ) -> dict[str, str]:
-        """Execute models in dependency order; returns name -> status.
+        """Build the selected models (all by default); returns name -> status
+        in ``topo_order()``.
+
+        A model starts as soon as each of its dependencies in ``select`` has
+        been written and has passed its checks, so independent models run
+        at the same time, one thread each (a dependency left out of
+        ``select`` is read as it stands). The pool is as wide as the
+        selection, so the DAG's width alone bounds how many models run at
+        once; nothing else configures it. Every thread carries the caller's
+        Spark local properties and tags (job group, scheduler pool, job
+        tags). Once any model fails, in its function, its write or its
+        checks, no further model starts: those already running finish, and
+        the run raises the error of the failed model that comes first in
+        ``topo_order()``.
 
         A model's ``tests(ctx, df)`` declares its checks on an Expectation
         over ``df`` and returns it unrun. The runner attaches the row checks
@@ -121,55 +149,78 @@ class ModelGraph:
         checks run beside it, and the catalog records the statistics (row
         count, timestamp and date ranges) that later watermarks read.
 
-        ``record_metadata=True`` appends one row per model run to the
-        ``_meta.run_metadata`` table (invocation_id, model, status, wall
-        seconds, rows written, error message) — the engine analogue of the
-        reference's dbt-artifact upload partitioned by invocation_id
+        ``record_metadata=True`` appends one row per model started to the
+        ``_meta.run_metadata`` table (invocation_id, model, status, seconds
+        from the run's start to the model's start, wall seconds, rows
+        written, error message), in ``topo_order()`` — the engine analogue
+        of the reference's dbt-artifact upload partitioned by invocation_id
         (SURVEY.md §2.A A7, ``DAG:66-107``). The rows are written even when
         a model raises: it gets status ``error`` and the run re-raises."""
-        import time as _time
-        import uuid as _uuid
-
-        invocation_id = _uuid.uuid4().hex
-        manifest: list[tuple] = []
-        ctx = Context(spark=spark, catalog=catalog, graph=self)
-        status: dict[str, str] = {}
+        invocation_id = uuid.uuid4().hex
+        order = self.topo_order(select)
+        chosen = set(order)
+        sorter = TopologicalSorter({n: [d for d in self.models[n].deps if d in chosen] for n in order})
+        sorter.prepare()
+        base = Context(spark=spark, catalog=catalog, graph=self)
+        build = inheritable_thread_target(spark)(_build)
+        t_run = time.perf_counter()
+        finished: dict[str, tuple] = {}
+        errors: dict[str, Exception] = {}
         try:
-            for name in self.topo_order(select):
-                t0 = _time.perf_counter()
-                spec = self.models[name]
-                ctx.current = spec
-                state, rows, message = "error", None, None
-                try:
-                    df = spec.fn(ctx)
-                    checks = spec.tests(ctx, df) if run_tests and spec.tests is not None else expect(df)
-                    if spec.materialized == "ephemeral":
-                        # nothing written: downstream ref() inlines the logical plan
-                        ctx._ephemeral_cache[name] = df
-                    else:
-                        target = checks.observe(_target(ctx, spec, df))
-                        catalog.overwrite(target, spec.schema, name, observation=checks.observation)
-                        rows = checks.observed_rows
-                        if checks.checks:
-                            checks.df = catalog.read(spec.schema, name)
-                    checks.run()
-                    state = status[name] = "ok"
-                except Exception as e:
-                    message = f"{type(e).__name__}: {e}"
-                    raise
-                finally:
-                    manifest.append(
-                        (invocation_id, name, state, _time.perf_counter() - t0, rows, message)
-                    )
+            with ThreadPoolExecutor(max_workers=max(1, len(order))) as pool:
+                running: set = set()
+                while True:
+                    if not errors:
+                        running |= {
+                            pool.submit(build, base.of(self.models[n]), run_tests, t_run)
+                            for n in sorter.get_ready()
+                        }
+                    if not running:
+                        break
+                    done, running = wait(running, return_when=FIRST_COMPLETED)
+                    for fut in done:
+                        row, err = fut.result()
+                        finished[row[0]] = row
+                        if err is None:
+                            sorter.done(row[0])
+                        else:
+                            errors[row[0]] = err
         finally:
+            manifest = [(invocation_id, *finished[n]) for n in order if n in finished]
             if record_metadata and manifest:
                 meta_df = spark.createDataFrame(
                     manifest,
-                    "invocation_id string, model string, status string, wall_sec double,"
-                    " rows long, message string",
+                    "invocation_id string, model string, status string, started_sec double,"
+                    " wall_sec double, rows long, message string",
                 )
                 catalog.append(meta_df, "_meta", "run_metadata")
-        return status
+        for n in order:
+            if n in errors:
+                raise errors[n]
+        return {n: "ok" for n in order}
+
+
+def _build(ctx: Context, run_tests: bool, t_run: float) -> tuple[tuple, Exception | None]:
+    """Build, write and check ``ctx.current``; returns its manifest row
+    (model, status, started_sec, wall_sec, rows, message) and its error."""
+    spec = ctx.current
+    t0 = time.perf_counter()
+    rows, err = None, None
+    try:
+        df = ctx.ref(spec.name) if spec.materialized == "ephemeral" else spec.fn(ctx)
+        checks = spec.tests(ctx, df) if run_tests and spec.tests is not None else expect(df)
+        if spec.materialized != "ephemeral":
+            target = checks.observe(_target(ctx, spec, df))
+            ctx.catalog.overwrite(target, spec.schema, spec.name, observation=checks.observation)
+            rows = checks.observed_rows
+            if checks.checks:
+                checks.df = ctx.catalog.read(spec.schema, spec.name)
+        checks.run()
+    except Exception as e:
+        err = e
+    message = None if err is None else f"{type(err).__name__}: {err}"
+    state = "ok" if err is None else "error"
+    return (spec.name, state, t0 - t_run, time.perf_counter() - t0, rows, message), err
 
 
 def _target(ctx: Context, spec: ModelSpec, df: DataFrame) -> DataFrame:

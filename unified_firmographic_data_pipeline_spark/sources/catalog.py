@@ -267,7 +267,15 @@ class Catalog:
     (epoch days for a date), NULL for an empty or all-NULL column. ``column_max`` answers from them, so a
     watermark over a table the catalog wrote costs no Spark job. ``append``
     and ``overwrite_partitions`` see only the rows they add, so their
-    record keeps the schema and no statistics."""
+    record keeps the schema and no statistics.
+
+    Writers may run concurrently (the model runner writes sibling models
+    from separate threads) on one condition: one writer per table at a
+    time. Everything a write touches belongs to its table alone: the
+    table directory, its ``.tmp-*`` and ``.old-*`` siblings (named with a
+    fresh random suffix per write) and its ``._schema.json`` sidecar (and
+    that sidecar's ``.tmp``). Two writers of the same table, or a reader
+    of a table being swapped, get no such guarantee."""
 
     def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
         if fmt not in CATALOG_FORMATS:
